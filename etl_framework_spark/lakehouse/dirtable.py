@@ -1,13 +1,13 @@
-"""``DirTable`` — a second, log-structured ``KeyedTable`` implementation.
+"""``DirTable`` — the log-structured metadata store over the shared data plane.
 
 Why it exists: ``docs/ICEBERG_ADAPTER.md`` promises that swapping table
 formats is a constructor change because every engine component programs
 against ``lakehouse.protocol.KeyedTable``. DirTable is the executable
-proof: a physically DIFFERENT format — a Delta-style dense-versioned
-commit log (one atomic JSON action file per commit; table state is the
-fold of add/replace actions) instead of ``LakeTable``'s Iceberg-style
-snapshot manifests — run through the same conformance, CDC, and
-streaming tests (``tests/test_table_conformance.py``).
+proof: a physically DIFFERENT metadata format — a Delta-style
+dense-versioned commit log (one atomic JSON action file per commit;
+table state is the fold of add/replace actions) instead of
+``LakeTable``'s Iceberg-style snapshot manifests — run through the same
+conformance, CDC, and streaming tests (``tests/test_table_conformance.py``).
 
 Format on disk::
 
@@ -19,32 +19,29 @@ Format on disk::
                             garbage-collected after it exists
     data/<commit>/_bucket=K/*.parquet
 
-Design points that deliberately differ from ``LakeTable``:
+One data plane, two stores: writes, reads, the merge-on-read fold, CoW
+and MoR merge, compaction, rebucketing, deletes, the change feed, file
+stats, data-file GC and the per-bucket conflict rule are
+``table.BucketedTable``'s, shared verbatim with ``LakeTable``. What this
+store decides on its own:
 
-- **Dense versions + exclusive create.** The next version number is
-  ``current + 1`` and publication is an exclusive hard-link; a taken
-  version reloads the log and re-applies the delta. ``replace`` commits
-  carry per-bucket *expected* file lists and surface ``CommitConflict``
-  when an overlapping writer got there first — the same optimistic
-  contract, reached by log replay instead of snapshot re-application.
+- **Commit-log fold.** Table state at a version is the fold of dense,
+  exclusively-created action files (hard-link publish; a taken version
+  reloads the log and the shared commit loop re-resolves the delta).
 - **Content-hash schema registry.** Data files reference their write
   schema by sha256 of the canonical schema JSON (order-independent and
   idempotent under concurrent registration, where integer ids would
   collide). The CURRENT table schema is the ``merge_schemas`` fold of
   every registered schema in commit order — monotone by construction,
-  so a stale maintenance commit can never regress an evolution (the
-  bug class round 3's chaos soak found in snapshot-land is structurally
-  impossible here).
+  so a stale maintenance commit can never regress an evolution.
 - **Checkpoints bound replay.** ``expire_snapshots`` writes a folded
-  checkpoint and deletes older commit files plus unreferenced data
-  files (with an mtime grace), so a sustained one-epoch-per-second
-  ingest replays O(keep_last), not O(all history).
+  checkpoint and deletes older commit files, so a sustained
+  one-epoch-per-second ingest replays O(keep_last), not O(all history);
+  a post-link guard keeps a commit racing that expiry from publishing
+  below a checkpoint (TOCTOU).
 
-Scale notes (100 TB): data layout, bucket pruning, and the
-single-shuffle merge path are identical to ``LakeTable`` — state
-reconstruction cost is the only difference, and checkpointing keeps it
-bounded. This mirrors the real Delta-vs-Iceberg trade: log replay vs
-manifest trees; both end in the same parquet scan.
+This mirrors the real Delta-vs-Iceberg trade: log replay vs manifest
+trees; both end in the same parquet scan.
 """
 
 from __future__ import annotations
@@ -53,31 +50,24 @@ import glob
 import hashlib
 import json
 import os
-import time
 import uuid
-from typing import Any, Callable
+from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from etl_framework_spark.lakehouse.table import (
-    MERGE_POLICIES,
-    CommitConflict,
-    SchemaEvolutionError,
+    DATA_DIR,
+    BucketDelta,
+    BucketedTable,
     VersionExpiredError,
-    align_to_schema,
-    bucket_expr,
-    collect_file_ranges,
-    fold_deltas,
-    merge_salt_groups,
+    check_merge_policy,
+    collect_file_ranges,  # noqa: F401  (re-exported module attribute)
+    link_json,
     merge_schemas,
-    scoped_fold_read,
-    stats_columns_for,
 )
 
 LOG_DIR = "_log"
-DATA_DIR = "data"
 FORMAT_TAG = "dir-log/1"
 
 
@@ -165,13 +155,15 @@ class _State:
         return s
 
 
-class DirTable:
+class DirTable(BucketedTable):
     """Log-structured keyed table; see module docstring.
 
     Satisfies ``lakehouse.protocol.KeyedTable`` (gated by the
     conformance suite) — construct one and hand it to ``apply_changes``
     / ``start_ingest(table_factory=DirTable)`` unchanged.
     """
+
+    SCHEMA_KEY = "schema"
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -191,6 +183,8 @@ class DirTable:
         self._commits: list[dict[str, Any]] = []  # parsed, after checkpoint
         self._ckpt: _State | None = None
         self._state = _State()
+        #: schemas this handle evolved to but no commit has registered yet
+        self._new_schemas: dict[str, T.StructType] = {}
         self.refresh()
 
     # ----------------------------------------------------------- lifecycle
@@ -208,12 +202,7 @@ class DirTable:
         log = os.path.join(path, LOG_DIR)
         if os.path.exists(os.path.join(log, "_table.json")):
             raise FileExistsError(f"table already exists: {path}")
-        if merge_policy not in MERGE_POLICIES:
-            raise ValueError(
-                f"merge_policy must be one of {MERGE_POLICIES}, got {merge_policy!r}"
-            )
-        if merge_policy == "lww" and order_columns is None:
-            order_columns = ["ts", "_lsn"]
+        order_columns = check_merge_policy(merge_policy, order_columns)
         os.makedirs(log, exist_ok=True)
         os.makedirs(os.path.join(path, DATA_DIR), exist_ok=True)
         with open(os.path.join(log, "_table.json"), "w") as f:
@@ -223,7 +212,7 @@ class DirTable:
                     "key_columns": list(key_columns),
                     "n_buckets": int(n_buckets),
                     "merge_policy": merge_policy,
-                    "order_columns": list(order_columns or []),
+                    "order_columns": order_columns,
                 },
                 f,
             )
@@ -347,480 +336,97 @@ class DirTable:
     def history(self) -> list[dict[str, Any]]:
         return list(self._state.history)
 
-    # --------------------------------------------------------------- reads
-    def _read_files(
-        self, entries: list[dict[str, Any]], schemas: dict[str, T.StructType],
-        current: T.StructType, with_seq: bool = False,
-    ) -> DataFrame | None:
-        if not entries:
-            return None
-        groups: dict[tuple[str, int], list[str]] = {}
-        for e in entries:
-            seq = int(e.get("seq", 0)) if with_seq else 0
-            groups.setdefault((e["schema"], seq), []).append(
-                os.path.join(self.path, e["path"])
-            )
-        parts = []
-        for (h, seq), files in groups.items():
-            df = self.spark.read.schema(schemas[h]).parquet(*files)
-            df = align_to_schema(df, current)
-            if with_seq:
-                df = df.withColumn("_seq", F.lit(seq))
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _fold(self, df: DataFrame) -> DataFrame:
-        return fold_deltas(df, self.key_columns, self.order_columns)
-
-    def read(
-        self,
-        buckets: list[int] | None = None,
-        version: int | None = None,
-        ranges: dict[str, tuple] | None = None,
-    ) -> DataFrame:
-        """Snapshot scan; same ``ranges`` file-skipping and
-        merge-on-read fold contract as ``LakeTable.read`` — including
-        the per-bucket fold scope (:func:`split_fold_entries`): only
-        buckets needing the fold (deltas, or base entries from multiple
-        commits) pay the union+window, clean buckets are served
-        base-only with pruning intact."""
-        state = self._state if version is None else self._state_at(version)
-        live = (
-            state.live
-            if buckets is None
-            else {str(b): state.live.get(str(b), []) for b in buckets}
-        )
-        current = state.current_schema
-        df = scoped_fold_read(
-            live,
-            ranges,
-            lambda entries, with_seq: self._read_files(
-                entries, state.schemas, current, with_seq=with_seq
-            ),
-            self._fold,
-        )
-        if df is None:
-            return self.spark.createDataFrame([], current)
-        return df
-
-    def current(
-        self,
-        buckets: list[int] | None = None,
-        version: int | None = None,
-        ranges: dict[str, tuple] | None = None,
-    ) -> DataFrame:
-        df = self.read(buckets=buckets, version=version, ranges=ranges)
-        if "_deleted" in df.columns:
-            df = df.where(~F.coalesce(F.col("_deleted"), F.lit(False)))
-        return df
-
-    def touched_buckets(self, source: DataFrame) -> list[int]:
-        key = self.key_columns[0]
-        ktype = self.schema[key].dataType
-        rows = (
-            source.select(
-                bucket_expr(F.col(key).cast(ktype), self.n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return sorted(r["b"] for r in rows)
-
-    # -------------------------------------------------------------- writes
-    def _ensure_schema(self, incoming: T.StructType) -> tuple[str, T.StructType]:
-        """Merge ``incoming`` into the current fold; returns the write
-        schema's content hash + the schema itself. Registration happens
-        inside the next commit (idempotent by hash)."""
-        merged, _ = merge_schemas(self.schema, incoming)
-        k = self.key_columns[0] if self.key_columns else None
-        if k is not None:
-            cur = {f.name: f.dataType for f in self.schema.fields}
-            new = {f.name: f.dataType for f in merged.fields}
-            if k in cur and new.get(k) != cur[k]:
-                raise SchemaEvolutionError(
-                    f"key column {k!r} cannot change type "
-                    f"({cur[k].simpleString()} -> {new[k].simpleString()}): "
-                    "bucket hashing is type-sensitive"
-                )
-        return _schema_hash(merged), merged
-
-    def _stats_columns(self, schema: T.StructType) -> list[str]:
-        return stats_columns_for(schema, self.key_columns, self.order_columns)
-
-    def _write_data(
-        self,
-        df: DataFrame,
-        schema_hash: str,
-        schema: T.StructType | None = None,
-        kind: str | None = None,
-        n_buckets: int | None = None,
+    # ------------------------------------------------ data-plane hooks
+    def _bucket_map(
+        self, version: int | None = None, buckets: list[int] | None = None
     ) -> dict[str, list[dict[str, Any]]]:
-        commit_id = uuid.uuid4().hex[:16]
-        out_dir = os.path.join(self.path, DATA_DIR, commit_id)
-        if "_bucket" in df.columns:
-            keyed = df
-        else:
-            keyed = (
-                df.withColumn(
-                    "_bucket",
-                    bucket_expr(self.key_columns[0], n_buckets or self.n_buckets),
-                )
-                .repartition("_bucket")
-                .sortWithinPartitions(*self.key_columns)
-            )
-        keyed.write.partitionBy("_bucket").parquet(out_dir, mode="overwrite")
-        stats_cols = self._stats_columns(schema) if schema is not None else []
-        files: list[tuple[str, str]] = []
-        for bdir in glob.glob(os.path.join(out_dir, "_bucket=*")):
-            b = bdir.rsplit("=", 1)[1]
-            for fp in glob.glob(os.path.join(bdir, "*.parquet")):
-                files.append((b, fp))
-        ranges = collect_file_ranges([fp for _, fp in files], stats_cols)
-        adds: dict[str, list[dict[str, Any]]] = {}
-        for b, fp in files:
-            rel = os.path.relpath(fp, self.path)
-            entry: dict[str, Any] = {"path": rel, "schema": schema_hash}
-            if kind == "delta":
-                entry["kind"] = "delta"
-            st = ranges.get(fp)
-            if st:
-                entry["stats"] = st
-            adds.setdefault(b, []).append(entry)
-        return adds
+        live = (self._state if version is None else self._state_at(version)).live
+        if buckets is None:
+            return live
+        sel = {str(int(b)) for b in buckets}
+        return {b: fs for b, fs in live.items() if b in sel}
 
-    def _commit(
+    def _schema_of(self, ref: str) -> T.StructType:
+        s = self._state.schemas.get(ref)
+        return s if s is not None else self._new_schemas[ref]
+
+    def _register_schema(self, merged: T.StructType, changed: bool) -> str:
+        """Content-hash refs; the schema itself is registered inside the
+        next commit that writes with it (idempotent by hash)."""
+        h = _schema_hash(merged)
+        self._new_schemas[h] = merged
+        return h
+
+    def _publish(
         self,
-        mode: str,
-        adds: dict[str, list[dict[str, Any]]],
-        schema_hash: str,
-        schema: T.StructType,
+        delta: BucketDelta,
+        schema_ref: str,
         summary: dict[str, Any],
-        epoch: tuple[str, int] | None = None,
-        replaced: list[str] | None = None,
-        expected: dict[str, list[dict[str, Any]]] | None = None,
-        on_conflict: str = "raise",
-        max_retries: int = 10,
-        epoch_skip: bool = False,
-        expect_version: int | None = None,
-        n_buckets: int | None = None,
+        epoch: tuple[str, int] | None,
+        n_buckets: int | None,
+        commit_id: str,
     ) -> int | None:
-        summary = {k: (v() if callable(v) else v) for k, v in summary.items()}
-        log = os.path.join(self.path, LOG_DIR)
-        # one identity across retries: if an attempt's link LANDED but a
-        # concurrent expire folded it into a checkpoint before our
-        # post-link read, the checkpoint's history carries this id and
-        # the guard below returns success instead of double-committing
-        commit_id = uuid.uuid4().hex
-        for _ in range(max_retries):
-            self.refresh()
-            if expect_version is not None and self._state.version != expect_version:
-                raise CommitConflict(
-                    f"table moved to v{self._state.version} (expected "
-                    f"v{expect_version}) during a whole-table rewrite"
-                )
-            if (
-                epoch_skip
-                and epoch is not None
-                and int(epoch[1]) <= self._state.epochs.get(epoch[0], -1)
-            ):
-                # merge-on-read appends have no bucket preconditions; the
-                # in-loop ledger check keeps concurrent same-epoch
-                # appliers exactly-once (see LakeTable._commit)
-                return None
-            # stamp EVERY entry of a merge-on-read table with the fold
-            # sequence this attempt will publish (re-stamped per retry).
-            # Base entries too: a blind append() landing after a delta
-            # commit must outrank it in a "replace" fold — unstamped
-            # base entries fold at seq 0 and lose to any older delta.
-            if self.merge_policy:
-                for fs in adds.values():
-                    for e in fs:
-                        e["seq"] = self._state.version + 1
-            adds_now, replaced_now = adds, list(replaced or [])
-            if expected is not None:
-                stale = [
-                    b
-                    for b, fs in expected.items()
-                    if [e["path"] for e in self._state.live.get(b, [])]
-                    != [e["path"] for e in fs]
-                ]
-                if stale:
-                    if on_conflict == "raise":
-                        raise CommitConflict(
-                            f"buckets {sorted(stale)} changed under this "
-                            f"{mode} commit"
-                        )
-                    # keep_fresh (maintenance): abandon the conflicted
-                    # buckets' rewrite, keep the fresh writer's files.
-                    adds_now = {
-                        b: fs for b, fs in adds.items() if b not in set(stale)
-                    }
-                    replaced_now = [b for b in replaced_now if b not in set(stale)]
-                    if not adds_now and not replaced_now:
-                        return self._state.version  # full no-op
-            commit = {
-                "version": self._state.version + 1,
-                "mode": mode,
-                "adds": adds_now,
-                "summary": summary,
-                "id": commit_id,
-            }
-            if n_buckets:
-                commit["n_buckets"] = int(n_buckets)
-            if mode == "replace":
-                commit["replaced"] = replaced_now
-            if schema_hash not in self._state.schemas:
-                commit["schemas"] = {schema_hash: json.loads(schema.json())}
-            if epoch is not None:
-                commit["epoch"] = [epoch[0], int(epoch[1])]
-            tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex}.json")
-            with open(tmp, "w") as f:
-                json.dump(commit, f)
-            final = self._log_path(commit["version"])
-            try:
-                os.link(tmp, final)
-            except FileExistsError:
-                os.unlink(tmp)
-                continue
-            os.unlink(tmp)
-            # TOCTOU guard (round-4 ADVICE): between our refresh() and the
-            # link, a concurrent process may have committed past this
-            # version AND expired the log (deleting this version's file
-            # and publishing a newer checkpoint) — the link then succeeds
-            # on an already-expired version NUMBER, publishing a commit
-            # below the checkpoint that no reader ever folds (readers
-            # re-seed from the newest checkpoint). expire_snapshots
-            # writes its checkpoint BEFORE deleting logs, so if our link
-            # only succeeded because the file was expired, that newer
-            # checkpoint is already on disk. A checkpoint at/above our
-            # version is AMBIGUOUS, though: it may instead have folded
-            # our just-linked commit (link landed, then an expirer with a
-            # small keep_last checkpointed it before this read). The
-            # checkpoint's history carries each folded commit's id, so
-            # check which case this is — blindly retrying the folded
-            # case would re-apply the same adds (double-commit).
-            newest_ck = self._load_checkpoint()
-            if newest_ck is not None and newest_ck.version >= int(commit["version"]):
-                folded = next(
-                    (
-                        h
-                        for h in newest_ck.history
-                        if int(h.get("version", -1)) == int(commit["version"])
-                    ),
-                    None,
-                )
-                if folded is not None and folded.get("id") == commit_id:
-                    # our commit IS in the checkpoint lineage: durable.
-                    # (the redundant log file <= checkpoint is ignored by
-                    # readers and GC'd by the next expire)
-                    self._ckpt, self._commits = None, []
-                    self.refresh()
-                    return int(commit["version"])
+        """Link the next log action: the resolved delta's adds (and
+        replaced buckets), any unregistered schema, the epoch marker."""
+        commit: dict[str, Any] = {
+            "version": self._state.version + 1,
+            "mode": delta.mode,
+            "adds": delta.entries,
+            "summary": summary,
+            "id": commit_id,
+        }
+        if n_buckets:
+            commit["n_buckets"] = int(n_buckets)
+        if delta.mode == "replace":
+            commit["replaced"] = sorted(delta.touched)
+        if schema_ref not in self._state.schemas:
+            commit["schemas"] = {schema_ref: json.loads(self._schema_of(schema_ref).json())}
+        if epoch is not None:
+            commit["epoch"] = [epoch[0], int(epoch[1])]
+        version = int(commit["version"])
+        if not link_json(os.path.join(self.path, LOG_DIR), "v%012d.json" % version, commit):
+            return None
+        # TOCTOU guard: between our refresh() and the
+        # link, a concurrent process may have committed past this
+        # version AND expired the log (deleting this version's file
+        # and publishing a newer checkpoint) — the link then succeeds
+        # on an already-expired version NUMBER, publishing a commit
+        # below the checkpoint that no reader ever folds (readers
+        # re-seed from the newest checkpoint). expire_snapshots
+        # writes its checkpoint BEFORE deleting logs, so if our link
+        # only succeeded because the file was expired, that newer
+        # checkpoint is already on disk. A checkpoint at/above our
+        # version is AMBIGUOUS, though: it may instead have folded
+        # our just-linked commit (link landed, then an expirer with a
+        # small keep_last checkpointed it before this read). The
+        # checkpoint's history carries each folded commit's id, so
+        # check which case this is — blindly retrying the folded
+        # case would re-apply the same adds (double-commit).
+        newest_ck = self._load_checkpoint()
+        if newest_ck is not None and newest_ck.version >= version:
+            folded = next(
+                (h for h in newest_ck.history if int(h.get("version", -1)) == version),
+                None,
+            )
+            self._ckpt, self._commits = None, []
+            if folded is None or folded.get("id") != commit_id:
                 try:
-                    os.unlink(final)
+                    os.unlink(self._log_path(version))
                 except FileNotFoundError:
                     pass
-                self._ckpt, self._commits = None, []
-                continue
-            self.refresh()
-            return int(commit["version"])
-        raise RuntimeError(f"commit contention: gave up after {max_retries} retries")
-
-    def append(
-        self,
-        df: DataFrame,
-        summary: dict[str, Any] | None = None,
-        epoch: tuple[str, int] | None = None,
-    ) -> int:
-        h, schema = self._ensure_schema(df.schema)
-        adds = self._write_data(align_to_schema(df, schema), h, schema=schema)
-        return self._commit(
-            "append", adds, h, schema,
-            {"operation": "append", **(summary or {})}, epoch=epoch,
-        )
-
-    def overwrite(
-        self,
-        df: DataFrame,
-        summary: dict[str, Any] | None = None,
-        epoch: tuple[str, int] | None = None,
-    ) -> int:
-        h, schema = self._ensure_schema(df.schema)
-        adds = self._write_data(align_to_schema(df, schema), h, schema=schema)
-        return self._commit(
-            "overwrite", adds, h, schema,
-            {"operation": "overwrite", **(summary or {})}, epoch=epoch,
-        )
-
-    def merge(
-        self,
-        source: DataFrame,
-        resolve: Callable[[DataFrame, DataFrame], DataFrame],
-        evolve_schema: T.StructType | None = None,
-        summary: dict[str, Any] | None = None,
-        epoch: tuple[str, int] | None = None,
-        touched: list[int] | None = None,
-        on_conflict: str = "raise",
-        mode: str | None = None,
-    ) -> int | None:
-        """Keyed MERGE — same two-strategy contract as
-        ``LakeTable.merge`` (``"cow"`` rewrite vs ``"mor"`` delta
-        append folded at read; default follows the table's
-        ``merge_policy``)."""
-        h, schema = self._ensure_schema(evolve_schema or source.schema)
-        if mode is None:
-            mode = "mor" if self.merge_policy else "cow"
-        if mode == "mor":
-            empty = align_to_schema(
-                self.spark.createDataFrame([], schema), schema
-            )
-            resolved = resolve(empty, source)
-            aligned = merge_salt_groups(
-                align_to_schema(resolved, schema, keep=["_bucket"]),
-                self.key_columns,
-            )
-            adds = self._write_data(aligned, h, schema=schema, kind="delta")
-            return self._commit(
-                "append", adds, h, schema,
-                {
-                    "operation": "merge",
-                    "mor": True,
-                    "touched_buckets": sorted(int(b) for b in adds),
-                    **(summary or {}),
-                },
-                epoch=epoch, epoch_skip=True,
-            )
-        if touched is None:
-            touched = self.touched_buckets(source)
-        expected = {
-            str(b): list(self._state.live.get(str(b), [])) for b in touched
-        }
-        target_subset = align_to_schema(self.read(buckets=touched), schema)
-        resolved = resolve(target_subset, source)
-        aligned = align_to_schema(resolved, schema, keep=["_bucket"])
-        adds = self._write_data(aligned, h, schema=schema)
-        replaced = sorted({str(b) for b in touched} | set(adds))
-        return self._commit(
-            "replace", adds, h, schema,
-            {"operation": "merge", "touched_buckets": touched, **(summary or {})},
-            epoch=epoch, replaced=replaced, expected=expected,
-            on_conflict=on_conflict,
-        )
-
-    def file_stats(self) -> dict[str, Any]:
-        """Files-per-bucket distribution incl. merge-on-read delta share
-        (maintenance trigger signal) — metadata only, no data IO. Same
-        keys as ``LakeTable.file_stats``."""
-        counts: dict[str, int] = {}
-        delta_counts: dict[str, int] = {}
-        for b, fs in self._state.live.items():
-            counts[b] = len(fs)
-            delta_counts[b] = sum(1 for e in fs if e.get("kind") == "delta")
-        return {
-            "n_buckets_with_data": len(counts),
-            "total_files": sum(counts.values()),
-            "max_files_per_bucket": max(counts.values(), default=0),
-            "delta_files": sum(delta_counts.values()),
-            "max_delta_files_per_bucket": max(delta_counts.values(), default=0),
-            "delta_buckets": sum(1 for v in delta_counts.values() if v > 0),
-        }
-
-    def rebucket(self, n_buckets: int, summary: dict[str, Any] | None = None) -> int:
-        """Offline whole-table re-key to a new bucket count — same
-        contract as ``LakeTable.rebucket`` (version-preconditioned
-        overwrite; epochs/watermarks carry forward; old versions stay
-        readable under their own width)."""
-        if n_buckets < 1:
-            raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        pre = self.version
-        h, schema = self._ensure_schema(self.schema)
-        data = align_to_schema(self.read(), schema)
-        adds = self._write_data(data, h, schema=schema, n_buckets=n_buckets)
-        v = self._commit(
-            "overwrite", adds, h, schema,
-            {
-                "operation": "rebucket",
-                "from_buckets": self.n_buckets,
-                **(summary or {}),
-            },
-            expect_version=pre, n_buckets=n_buckets,
-        )
-        assert self.n_buckets == n_buckets
-        return v
-
-    # --------------------------------------------------------- maintenance
-    def changes_between(self, v_from: int, v_to: int) -> DataFrame:
-        """Row-level CDC-out feed between two committed versions — same
-        contract as ``LakeTable.changes_between`` (one row per changed
-        key, ``_change_type`` I/U/D). Bucket-pruned from the commit-log
-        fold: only buckets whose live file lists differ between the two
-        states are read. Versions below the oldest checkpoint raise
-        (expired from the time-travel window)."""
-        so, sn = self._state_at(v_from), self._state_at(v_to)
-
-        def files(state: _State, b: str) -> list[str]:
-            return [e["path"] for e in state.live.get(b, [])]
-
-        changed = sorted(
-            int(b)
-            for b in set(so.live) | set(sn.live)
-            if files(so, b) != files(sn, b)
-        )
-        from etl_framework_spark.lakehouse.feed import (
-            delta_fast_path,
-            diff_versions,
-        )
-
-        # same delta-only key-scoped fast path as LakeTable.changes_between
-        delta_rows, added = delta_fast_path(
-            {str(b): so.live.get(str(b), []) for b in changed},
-            {str(b): sn.live.get(str(b), []) for b in changed},
-            lambda entries: self._read_files(
-                entries, sn.schemas, sn.current_schema, with_seq=True
-            ),
-        )
-        return diff_versions(
-            self, v_from, v_to, changed,
-            delta_rows=delta_rows, delta_entries=added,
-        )
-
-    def compact(
-        self,
-        buckets: list[int] | None = None,
-        min_files: int = 2,
-        summary: dict[str, Any] | None = None,
-    ) -> int:
-        cand = sorted(
-            int(b)
-            for b, fs in self._state.live.items()
-            if len(fs) >= min_files and (buckets is None or int(b) in set(buckets))
-        )
-        if not cand:
-            return self._state.version
-        h, schema = self._ensure_schema(self.schema)
-        expected = {str(b): list(self._state.live.get(str(b), [])) for b in cand}
-        df = align_to_schema(self.read(buckets=cand), schema)
-        adds = self._write_data(df, h, schema=schema)
-        return self._commit(
-            "replace", adds, h, schema,
-            {"operation": "compact", "buckets": cand, **(summary or {})},
-            replaced=sorted({str(b) for b in cand} | set(adds)),
-            expected=expected, on_conflict="keep_fresh",
-        )
-
-    def expire_snapshots(
-        self, keep_last: int = 10, grace_seconds: int = 3600
-    ) -> dict[str, int]:
-        """Checkpoint the fold at (newest - keep_last + 1) and GC commit
-        files at or below it plus data files referenced by NO surviving
-        version (mtime-grace-guarded, same contract as LakeTable)."""
+                return None
+            # our commit IS in the checkpoint lineage: durable. (the
+            # redundant log file <= checkpoint is ignored by readers
+            # and GC'd by the next expire)
         self.refresh()
-        newest = self._state.version
-        cut = newest - keep_last + 1
-        removed_log = removed_data = 0
+        return version
+
+    def _expire_versions(self, keep_last: int) -> tuple[int, int]:
+        """Checkpoint the fold at (newest - keep_last + 1), then delete
+        the commit files and older checkpoints it absorbed."""
+        self.refresh()
+        cut = self._state.version - keep_last + 1
+        removed_log = 0
         base = self._ckpt.version if self._ckpt is not None else -1
         if cut > base:
             state = self._state_at(cut)
@@ -858,31 +464,13 @@ class DirTable:
                     os.unlink(old)
             self._ckpt, self._commits = None, []
             self.refresh()
+        return removed_log, max(cut, base, 0)
 
-        # GC data files referenced by no surviving version
-        referenced: set[str] = set()
-        survive_from = self._ckpt.version if self._ckpt is not None else 0
-        for v in range(survive_from, self._state.version + 1):
-            try:
-                s = self._state_at(v)
-            except ValueError:
-                continue
-            for fs in s.live.values():
-                referenced.update(e["path"] for e in fs)
-        now = time.time()
-        for fp in glob.glob(os.path.join(self.path, DATA_DIR, "*", "*", "*.parquet")):
-            rel = os.path.relpath(fp, self.path)
-            if rel in referenced:
-                continue
-            try:
-                if now - os.path.getmtime(fp) < grace_seconds:
-                    continue
-                os.unlink(fp)
-                removed_data += 1
-            except FileNotFoundError:
-                continue
-        # same result keys as LakeTable so callers treat formats alike
-        return {
-            "expired_snapshots": removed_log,
-            "deleted_data_files": removed_data,
-        }
+    def _referenced_files(self) -> set[str]:
+        """One pass over the surviving log: every surviving version's
+        live set is the checkpoint's live set plus adds of the commits
+        up to it, so their union is the checkpoint's files plus every
+        add — no per-version re-fold."""
+        lists = list(self._ckpt.live.values()) if self._ckpt is not None else []
+        lists += [fs for c in self._commits for fs in c.get("adds", {}).values()]
+        return {e["path"] for fs in lists for e in fs}

@@ -7,8 +7,9 @@ buckets whose file lists differ between the versions (copy-on-write
 rewrites whole buckets, so identical file list ⇒ identical content),
 then one full-outer join on the key classifies each changed key as
 I / U / D. Each format supplies the changed-bucket set from its own
-metadata (LakeTable: snapshot/shard references; DirTable: commit-log
-fold) — the join itself lives here, once.
+metadata (the shared ``BucketedTable.changes_between`` over LakeTable's
+snapshot/shard references or DirTable's commit-log fold; IcebergTable's
+snapshots) — the join itself lives here, once.
 
 reference parity: the reference has no CDC-out surface; this mirrors
 Delta's ``table_changes`` / Iceberg's changelog scan shape so a
@@ -51,7 +52,7 @@ def delta_interval_suffix(
 
 
 def delta_fast_path(old_map: dict, new_map: dict, read_files):
-    """Shared fast-path plumbing for both formats' ``changes_between``:
+    """Fast-path plumbing for ``BucketedTable.changes_between``:
     detect a purely-additive delta interval and read its appended rows
     with ``_seq``. Returns ``(delta_rows, entries)`` or ``(None,
     None)``. ``read_files(entries)`` is the format's own reader — one
@@ -236,10 +237,10 @@ def diff_versions(
     from etl_framework_spark.lakehouse.table import align_to_schema
 
     new = table.current(buckets=changed_buckets, version=v_to)
-    # the interval may span a schema evolution: the older version's
-    # rows can predate ``_lsn``/added columns (DirTable time-travel
-    # serves each version under ITS schema) — align the old side to the
-    # newer shape so the diff below is well-formed either way
+    # the interval may span a schema evolution: a format whose time
+    # travel serves each version under ITS schema (Iceberg) can return
+    # older rows without ``_lsn``/added columns — align the old side to
+    # the newer shape so the diff below is well-formed either way
     old = align_to_schema(
         table.current(buckets=changed_buckets, version=v_from), new.schema
     )

@@ -2,11 +2,14 @@
 
 ``KeyedTable`` is the protocol every component in this repo programs
 against (``cdc.apply_changes``, ``streaming.start_ingest``, the load
-strategies, the pipeline loaders). ``LakeTable`` implements it with the
-self-contained bucket/manifest format; a real Iceberg catalog satisfies
-it 1:1 — see ``docs/ICEBERG_ADAPTER.md`` for the per-method mapping and
-the exactly-once/epoch translation. Swapping formats is a constructor
-change, not an engine change.
+strategies, the pipeline loaders). The self-hosted formats satisfy it
+with ONE data plane over two metadata stores: ``table.BucketedTable``
+owns the bucketed writes, reads, fold, merge, maintenance and change
+feed, and ``LakeTable`` (snapshot manifests) and ``DirTable`` (commit
+log) supply only versioned metadata. ``IcebergTable`` satisfies it
+against a real catalog 1:1 — see ``docs/ICEBERG_ADAPTER.md`` for the
+per-method mapping and the exactly-once/epoch translation. Swapping
+formats is a constructor change, not an engine change.
 """
 
 from __future__ import annotations

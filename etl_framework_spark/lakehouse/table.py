@@ -1,7 +1,10 @@
-"""LakeTable — bucket-partitioned parquet table with snapshot isolation.
+"""The bucketed data plane (``BucketedTable``) and ``LakeTable``, its
+snapshot-manifest store.
 
 Iceberg-semantics storage for the CDC engine, built for the copy-on-write
-MERGE pattern:
+MERGE pattern. ``BucketedTable`` owns everything below except the
+snapshot/shard manifests, which are ``LakeTable``'s metadata store
+(``dirtable.DirTable`` is the commit-log store over the same plane):
 
 - **Data layout**: ``data/<commit-uuid>/_bucket=N/part-*.parquet``. Every
   row is assigned ``bucket = pmod(xxhash64(key0), n_buckets)`` — the same
@@ -60,13 +63,17 @@ from __future__ import annotations
 import glob
 import json
 import os
+import time
 import uuid
 from dataclasses import dataclass
-from typing import Any
+from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+if TYPE_CHECKING:
+    from etl_framework_spark.lakehouse.protocol import KeyedTable
 
 META_DIR = "_meta"
 DATA_DIR = "data"
@@ -106,7 +113,7 @@ class CommitConflict(RuntimeError):
 
 
 def commit_with_retry(
-    table: "LakeTable",
+    table: "KeyedTable",
     op,
     max_retries: int = 5,
     base_backoff_s: float = 0.05,
@@ -123,7 +130,6 @@ def commit_with_retry(
     propagates.
     """
     import random
-    import time
 
     for attempt in range(max_retries):
         try:
@@ -218,22 +224,6 @@ def collect_file_ranges(
         return dict(results)
 
 
-def stats_columns_for(
-    schema: T.StructType, key_columns: list[str], order_columns: list[str]
-) -> list[str]:
-    """Columns whose per-file min/max ranges ride in the manifest: the
-    bucket key plus the event-order columns (what time-travel / feed /
-    GC reads bound on). Shared by every format so both record the same
-    skipping metadata."""
-    want = [key_columns[0], *order_columns, "ts", "_lsn"]
-    have = {f.name for f in schema.fields}
-    out: list[str] = []
-    for c in want:
-        if c in have and c not in out:
-            out.append(c)
-    return out
-
-
 def merge_salt_groups(df: DataFrame, key_columns: list[str]) -> DataFrame:
     """Merge a resolver's salt groups before a merge-on-read delta
     write: the salt parallelizes the resolve WINDOW, but written as-is
@@ -241,8 +231,7 @@ def merge_salt_groups(df: DataFrame, key_columns: list[str]) -> DataFrame:
     inflating read-side fold cost and compaction frequency. One
     O(batch) exchange of the already-deduped winners caps deltas at one
     file per bucket per epoch, key-sorted so their manifest stats bound
-    tight. SHARED by both formats (same rationale as ``fold_deltas``):
-    the delta layout is part of the read-cost contract."""
+    tight: the delta layout is part of the read-cost contract."""
     if "_bucket" not in df.columns:
         return df
     return df.repartition("_bucket").sortWithinPartitions(*key_columns)
@@ -276,24 +265,6 @@ def delta_rank(
     return df.withColumn("_rn", F.row_number().over(w))
 
 
-def fold_deltas(
-    df: DataFrame, key_columns: list[str], order_columns: list[str]
-) -> DataFrame:
-    """Merge-on-read fold: one winner per key across base + delta rows
-    — ``delta_rank``'s top row. ``compact`` collapses deltas so
-    steady-state reads skip the fold entirely.
-
-    SHARED by every table format (as is :func:`delta_rank`, which the
-    change feed's fast path also ranks with) — the fold order is the
-    read-time correctness contract, and two drifting copies would let
-    the same deltas fold to different states per format."""
-    return (
-        delta_rank(df, key_columns, order_columns)
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_seq")
-    )
-
-
 def split_fold_entries(
     bucket_map: dict, ranges: dict[str, tuple] | None = None
 ) -> tuple[list[dict], list[dict]]:
@@ -315,11 +286,7 @@ def split_fold_entries(
 
     This is the read-side mirror of the O(batch) delta write: at 100 TB
     a small epoch touches a handful of buckets, and only THOSE buckets'
-    rows may enter the fold window — not the whole table.
-
-    SHARED by every format, like :func:`fold_deltas`: two drifting
-    copies of the fold-scope rule would let the same snapshot read
-    differently per format."""
+    rows may enter the fold window — not the whole table."""
     clean: list[dict] = []
     folded: list[dict] = []
     for files in bucket_map.values():
@@ -332,31 +299,6 @@ def split_fold_entries(
         else:
             clean.extend(files)
     return clean, folded
-
-
-def scoped_fold_read(
-    bucket_map: dict,
-    ranges: dict[str, tuple] | None,
-    read_files,
-    fold,
-) -> "DataFrame | None":
-    """The shared read-combine step over :func:`split_fold_entries`:
-    base-only scan of clean buckets unioned with the fold of delta
-    buckets. ``read_files(entries, with_seq)`` and ``fold(df)`` are the
-    format's own readers; returns None when the selection is empty.
-    Shared for the same reason as the split itself — a drifting copy of
-    the union/None handling would let the same snapshot read
-    differently per format."""
-    clean, folded = split_fold_entries(bucket_map, ranges)
-    base = read_files(clean, False)
-    delta = read_files(folded, True)
-    if delta is not None:
-        delta = fold(delta)
-    if base is None:
-        return delta
-    if delta is None:
-        return base
-    return base.unionByName(delta)
 
 
 def entry_matches_ranges(entry: dict, ranges: dict[str, tuple]) -> bool:
@@ -530,9 +472,9 @@ class BucketDelta:
       - ``replace``   replace listed buckets; ``dropped`` buckets are
                       removed; with ``expected`` set, a bucket whose
                       fresh file list moved since the writer's read is a
-                      CONFLICT — resolved per ``on_conflict``
-                      (``keep_fresh``: skip that bucket; ``raise``:
-                      abort the commit loudly)
+                      CONFLICT — resolved per ``on_conflict`` by
+                      :meth:`against` (``keep_fresh``: skip that bucket;
+                      ``raise``: abort the commit loudly)
       - ``overwrite`` the map becomes exactly ``entries``
     """
 
@@ -550,13 +492,42 @@ class BucketDelta:
     def touched(self) -> set[str]:
         return set(self.entries) | set(self.dropped)
 
+    def against(
+        self, fresh: dict[str, list[dict[str, Any]]]
+    ) -> "BucketDelta | None":
+        """Resolve the ``expected`` preconditions against ``fresh`` (the
+        head's file lists for the touched buckets) — THE conflict rule
+        of every store. A bucket whose list moved since the writer's
+        read conflicts: ``raise`` aborts the commit, ``keep_fresh`` drops
+        that bucket (the concurrent writer's view wins). Returns the
+        precondition-free delta to publish, or None when every touched
+        bucket conflicted (a full no-op: nothing to commit)."""
+        stale = {
+            b
+            for b in self.touched
+            if fresh.get(b, []) != (self.expected or {}).get(b, [])
+        }
+        if stale and self.on_conflict == "raise":
+            raise CommitConflict(
+                f"buckets {sorted(stale, key=int)} rewritten concurrently "
+                "during commit"
+            )
+        if stale and stale >= self.touched:
+            return None
+        return BucketDelta(
+            self.mode,
+            {b: fs for b, fs in self.entries.items() if b not in stale},
+            dropped=self.dropped - stale,
+        )
+
     def apply(
         self,
         current: dict[str, list[dict[str, Any]]],
         restrict: set[str] | None = None,
     ) -> dict[str, list[dict[str, Any]]]:
         """New bucket map from ``current`` (optionally only buckets in
-        ``restrict`` — used to apply shard-by-shard)."""
+        ``restrict`` — used to apply shard-by-shard). Preconditions must
+        already be resolved (:meth:`against`)."""
         sel = (lambda b: True) if restrict is None else (lambda b: b in restrict)
         if self.mode == "overwrite":
             return {b: list(fs) for b, fs in self.entries.items() if sel(b)}
@@ -570,12 +541,6 @@ class BucketDelta:
         for b in self.touched:
             if not sel(b):
                 continue
-            if self.expected is not None and out.get(b, []) != self.expected.get(b, []):
-                if self.on_conflict == "raise":
-                    raise CommitConflict(
-                        f"bucket {b} rewritten concurrently during commit"
-                    )
-                continue  # keep_fresh: the concurrent writer's view wins
             if b in self.entries:
                 out[b] = list(self.entries[b])
             else:
@@ -583,8 +548,765 @@ class BucketDelta:
         return out
 
 
-class LakeTable:
-    """A bucket-partitioned snapshot-versioned parquet table."""
+def check_merge_policy(
+    merge_policy: str | None, order_columns: list[str] | None
+) -> list[str]:
+    """Validate a create-time ``merge_policy``; returns the fold's order
+    columns (``"lww"`` defaults to ``["ts", "_lsn"]``, the CDC stored
+    shape). Shared by every format's ``create``."""
+    if merge_policy not in MERGE_POLICIES:
+        raise ValueError(
+            f"merge_policy must be one of {MERGE_POLICIES}, got {merge_policy!r}"
+        )
+    if merge_policy == "lww" and order_columns is None:
+        order_columns = ["ts", "_lsn"]
+    return list(order_columns or [])
+
+
+def link_json(directory: str, name: str, obj: Any) -> bool:
+    """Publish ``obj`` as ``directory/name`` iff that name is still free:
+    write a temp file, then hard-link it to the final name. ``os.link``
+    fails when the name exists, which is the optimistic-concurrency
+    primitive every store commits with (a real deployment swaps it for a
+    catalog compare-and-swap). Returns False when another writer took
+    the name."""
+    tmp = os.path.join(directory, f".tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    try:
+        os.link(tmp, os.path.join(directory, name))
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
+#: Spark's job-commit markers; a data directory holding only these has
+#: no data left and is pruned by ``expire_snapshots``
+_WRITE_MARKERS = {"_SUCCESS", "._SUCCESS.crc"}
+
+
+def _unlink_data_file(fp: str) -> bool:
+    """Remove a data file and its Hadoop ``.crc`` sidecar; False if a
+    concurrent GC got there first."""
+    d, name = os.path.split(fp)
+    try:
+        os.unlink(os.path.join(d, f".{name}.crc"))
+    except FileNotFoundError:
+        pass
+    try:
+        os.unlink(fp)
+        return True
+    except FileNotFoundError:
+        return False
+
+
+def _prune_data_dirs(data_root: str) -> None:
+    """Drop commit directories ``expire_snapshots`` emptied: their empty
+    bucket directories, then the commit directory itself once only
+    Spark's job markers remain. Only FINISHED writes (``_SUCCESS``
+    present) are touched: an in-flight task commit creates a bucket
+    directory empty and fills it a moment later, while a finished
+    write's directory only ever loses files to this GC."""
+    for commit in glob.glob(os.path.join(data_root, "*")):
+        try:
+            if "_SUCCESS" not in os.listdir(commit):
+                continue
+            for sub in glob.glob(os.path.join(commit, "*")):
+                if os.path.isdir(sub) and not os.listdir(sub):
+                    os.rmdir(sub)
+            left = set(os.listdir(commit))
+            if left <= _WRITE_MARKERS:
+                for m in left:
+                    os.unlink(os.path.join(commit, m))
+                os.rmdir(commit)
+        except FileNotFoundError:  # a concurrent expire pruned it first
+            continue
+
+
+class BucketedTable:
+    """The bucketed data plane every self-hosted format shares.
+
+    Writes, reads, the merge-on-read fold, CoW and MoR ``merge``,
+    compaction, rebucketing, deletes, the change feed, file stats and
+    data-file GC live here ONCE. A format subclass is only a METADATA
+    STORE: it sets ``spark``, ``path``, ``key_columns``, ``n_buckets``,
+    ``merge_policy`` and ``order_columns``; provides ``version``,
+    ``schema``, ``refresh``, ``last_epoch`` and ``history``; and
+    implements these hooks:
+
+    - ``_bucket_map(version=None, buckets=None)`` — bucket -> manifest
+      entries at a version (head by default), optionally restricted;
+    - ``_schema_of(ref)`` — the schema an entry's ``SCHEMA_KEY`` names;
+    - ``_register_schema(merged, changed)`` — the ref for an evolved
+      (or unchanged) write schema;
+    - ``_publish(delta, schema_ref, summary, epoch, n_buckets,
+      commit_id)`` — write one commit for a conflict-resolved
+      :class:`BucketDelta` on top of the freshly refreshed head; returns
+      the new version, or None when another writer took it (retry);
+    - ``_expire_versions(keep_last)`` — drop old version metadata;
+      returns ``(expired, kept_from_version)``;
+    - ``_referenced_files()`` — relpaths of every data (and
+      ``GC_METADATA_GLOB``) file a surviving version references.
+
+    ``_diff_maps`` may be overridden when the store can prove buckets
+    unchanged without loading them (sharded manifests do).
+    """
+
+    #: manifest-entry key naming the schema a data file was written with
+    SCHEMA_KEY = "schema_id"
+    #: store metadata files that surviving versions reference and
+    #: ``expire_snapshots`` garbage-collects like data files
+    GC_METADATA_GLOB: str | None = None
+
+    # -------------------------------------------------------------- reads
+    def _read_files(
+        self, entries: list[dict[str, Any]], with_seq: bool = False
+    ) -> DataFrame | None:
+        """Read manifest file entries, upcasting each schema group to the
+        CURRENT table schema (also for time travel, so every version of
+        a table reads with one column set). ``with_seq`` attaches each
+        file's fold sequence as ``_seq`` (delta entries carry their
+        commit version; base entries fold below every delta appended
+        after them)."""
+        if not entries:
+            return None
+        groups: dict[tuple[Any, int], list[str]] = {}
+        for e in entries:
+            seq = int(e.get("seq", 0)) if with_seq else 0
+            groups.setdefault((e[self.SCHEMA_KEY], seq), []).append(
+                os.path.join(self.path, e["path"])
+            )
+        current = self.schema
+        parts = []
+        for (ref, seq), files in groups.items():
+            df = self.spark.read.schema(self._schema_of(ref)).parquet(*files)
+            df = align_to_schema(df, current)
+            if with_seq:
+                df = df.withColumn("_seq", F.lit(seq))
+            parts.append(df)
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
+    def read(
+        self,
+        buckets: list[int] | None = None,
+        version: int | None = None,
+        ranges: dict[str, tuple] | None = None,
+    ) -> DataFrame:
+        """Snapshot as a DataFrame; optionally only some buckets and/or a
+        historical ``version`` (time travel — old data files are never
+        mutated, only dereferenced, so any committed version stays
+        readable until GC).
+
+        ``ranges`` — ``{col: (lo, hi)}`` scan bounds (either side may be
+        None): files whose recorded min/max stats prove no row matches
+        are skipped entirely (Iceberg metrics-based file skipping). The
+        bounds only PRUNE — the caller still applies its row filter.
+        Pruning is disabled per-bucket while that bucket needs the
+        merge-on-read fold (unfolded deltas, or base entries from
+        multiple commits): dropping a file there could promote a
+        superseded row version to fold winner, changing results, not
+        just cost. Likewise the fold itself is scoped to those buckets
+        (:func:`split_fold_entries`) — a small delta must not drag
+        every clean bucket through the union+window."""
+        clean, folded = split_fold_entries(self._bucket_map(version, buckets), ranges)
+        parts = [self._read_files(clean)]
+        delta = self._read_files(folded, with_seq=True)
+        if delta is not None:
+            # the merge-on-read fold: one winner per key, delta_rank's
+            # top row (``compact`` collapses deltas so steady-state
+            # reads skip it)
+            ranked = delta_rank(delta, self.key_columns, self.order_columns)
+            parts.append(ranked.where(F.col("_rn") == 1).drop("_rn", "_seq"))
+        parts = [df for df in parts if df is not None]
+        if not parts:
+            return self.spark.createDataFrame([], self.schema)
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+
+    def current(
+        self,
+        buckets: list[int] | None = None,
+        version: int | None = None,
+        ranges: dict[str, tuple] | None = None,
+    ) -> DataFrame:
+        """Live rows: ``read()`` minus delete tombstones (if the table
+        carries the ``_deleted`` system column)."""
+        df = self.read(buckets=buckets, version=version, ranges=ranges)
+        if "_deleted" in df.columns:
+            df = df.where(~F.coalesce(F.col("_deleted"), F.lit(False)))
+        return df
+
+    def _diff_maps(self, v_from: int, v_to: int) -> tuple[dict, dict]:
+        """Bucket maps of two versions covering at least every bucket
+        whose file list differs between them."""
+        return self._bucket_map(v_from), self._bucket_map(v_to)
+
+    def changes_between(self, v_from: int, v_to: int) -> DataFrame:
+        """Row-level change feed between two committed versions (CDC-out):
+        one row per key whose state changed, with ``_change_type`` I/U/D.
+
+        Bucket-pruned: only buckets whose file lists differ between the
+        versions are read (copy-on-write rewrites whole buckets, so an
+        identical file list ⇒ identical content). The diff itself is
+        :func:`~etl_framework_spark.lakehouse.feed.diff_versions` over
+        those buckets; a delta-only interval takes its key-scoped fast
+        path (only keys in the appended delta files can have changed).
+        Versions expired from the time-travel window raise
+        :class:`VersionExpiredError`."""
+        from etl_framework_spark.lakehouse.feed import (
+            delta_fast_path,
+            diff_versions,
+        )
+
+        ob, nb = self._diff_maps(v_from, v_to)
+        changed = [b for b in set(ob) | set(nb) if ob.get(b) != nb.get(b)]
+        delta_rows, added = delta_fast_path(
+            {b: ob.get(b, []) for b in changed},
+            {b: nb.get(b, []) for b in changed},
+            lambda entries: self._read_files(entries, with_seq=True),
+        )
+        return diff_versions(
+            self, v_from, v_to, sorted(int(b) for b in changed),
+            delta_rows=delta_rows, delta_entries=added,
+        )
+
+    def touched_buckets(self, source: DataFrame) -> list[int]:
+        """Buckets a source batch lands in (small: <= n_buckets rows).
+
+        The source key is CAST to the table's key type before hashing:
+        xxhash64 is type-sensitive, so an int batch merged into a
+        long-keyed table (which ``merge_schemas`` permits) would
+        otherwise compute a wrong touched set and leave stale row
+        versions alive in the real bucket."""
+        key = self.key_columns[0]
+        ktype = self.schema[key].dataType
+        rows = (
+            source.select(
+                bucket_expr(F.col(key).cast(ktype), self.n_buckets).alias("b")
+            )
+            .distinct()
+            .collect()
+        )
+        return sorted(r["b"] for r in rows)
+
+    def file_stats(self) -> dict[str, Any]:
+        """Files-per-bucket distribution (the maintenance trigger
+        signal): total/max files per bucket, plus the merge-on-read
+        delta share — metadata-only, no data IO."""
+        counts: dict[str, int] = {}
+        delta_counts: dict[str, int] = {}
+        for b, fs in self._bucket_map().items():
+            counts[b] = len(fs)
+            delta_counts[b] = sum(1 for e in fs if e.get("kind") == "delta")
+        return {
+            "n_buckets_with_data": len(counts),
+            "total_files": sum(counts.values()),
+            "max_files_per_bucket": max(counts.values(), default=0),
+            "delta_files": sum(delta_counts.values()),
+            "max_delta_files_per_bucket": max(delta_counts.values(), default=0),
+            "delta_buckets": sum(1 for v in delta_counts.values() if v > 0),
+        }
+
+    # ------------------------------------------------------------- writes
+    def _ensure_schema(self, incoming: T.StructType) -> tuple[Any, T.StructType]:
+        """Evolve the table schema to accept ``incoming``; returns the
+        store's ref for the write schema, and the schema itself."""
+        merged, changed = merge_schemas(self.schema, incoming)
+        # The BUCKET key column (key_columns[0], the only hash input) may
+        # never change type: xxhash64 is type-sensitive, so widening it
+        # would silently split each key's rows across two buckets (old
+        # writes hashed narrow, new writes hashed wide). Other key
+        # columns may widen freely (they only join sorts/windows, which
+        # cast), and narrower *batches* are fine — upcast before
+        # hashing/writing.
+        k = self.key_columns[0] if self.key_columns else None
+        if changed and k is not None:
+            cur = {f.name: f.dataType for f in self.schema.fields}
+            new = {f.name: f.dataType for f in merged.fields}
+            if k in cur and new.get(k) != cur[k]:
+                raise SchemaEvolutionError(
+                    f"key column {k!r} cannot change type "
+                    f"({cur[k].simpleString()} -> {new[k].simpleString()}): "
+                    "bucket hashing is type-sensitive"
+                )
+        return self._register_schema(merged, changed), merged
+
+    def _write_data(
+        self,
+        df: DataFrame,
+        schema_ref: Any,
+        kind: str | None = None,
+        n_buckets: int | None = None,
+    ) -> dict[str, list[dict[str, Any]]]:
+        """Write df (already aligned to ``schema_ref``'s schema) bucket-
+        partitioned; returns bucket -> manifest entries.
+
+        If ``df`` already carries a ``_bucket`` column (the single-shuffle
+        resolver emits data repartitioned by bucket and key-sorted), it is
+        written as-is — no extra exchange or sort.
+
+        ``kind="delta"`` tags the entries as merge-on-read deltas (the
+        commit stamps their fold sequence); ``n_buckets`` overrides the
+        layout width (``rebucket``)."""
+        commit_id = uuid.uuid4().hex[:16]
+        out_dir = os.path.join(self.path, DATA_DIR, commit_id)
+        if "_bucket" in df.columns:
+            keyed = df
+        else:
+            # One shuffle, partitioned by bucket so each output dir is
+            # written by the tasks owning that bucket; file count per
+            # bucket stays low.
+            keyed = (
+                df.withColumn(
+                    "_bucket",
+                    bucket_expr(self.key_columns[0], n_buckets or self.n_buckets),
+                )
+                .repartition("_bucket")
+                .sortWithinPartitions(*self.key_columns)
+            )
+        keyed.write.partitionBy("_bucket").parquet(out_dir, mode="overwrite")
+        # per-file min/max ride in the manifest for the bucket key and
+        # the event-order columns (what time-travel / feed / GC reads
+        # bound on)
+        have = set(self._schema_of(schema_ref).fieldNames())
+        want = [self.key_columns[0], *self.order_columns, "ts", "_lsn"]
+        stats_cols = [c for c in dict.fromkeys(want) if c in have]
+        files: list[tuple[str, str]] = []
+        for bdir in glob.glob(os.path.join(out_dir, "_bucket=*")):
+            b = bdir.rsplit("=", 1)[1]
+            for fp in glob.glob(os.path.join(bdir, "*.parquet")):
+                files.append((b, fp))
+        # Footer-only metadata reads (Iceberg manifest metrics analog) —
+        # let bounded reads skip files. Parallel: a commit can produce
+        # hundreds of files (buckets x salt groups) and a sequential
+        # footer loop measurably taxes the apply hot path; a real
+        # deployment computes these executor-side inside the write tasks.
+        ranges = collect_file_ranges([fp for _, fp in files], stats_cols)
+        buckets: dict[str, list[dict[str, Any]]] = {}
+        for b, fp in files:
+            rel = os.path.relpath(fp, self.path)
+            entry: dict[str, Any] = {"path": rel, self.SCHEMA_KEY: schema_ref}
+            if kind == "delta":
+                entry["kind"] = "delta"
+            st = ranges.get(fp)
+            if st:
+                entry["stats"] = st
+            buckets.setdefault(b, []).append(entry)
+        return buckets
+
+    def _commit(
+        self,
+        delta: BucketDelta,
+        schema_ref: Any,
+        summary: dict[str, Any],
+        epoch: tuple[str, int] | None = None,
+        max_retries: int = 10,
+        epoch_skip: bool = False,
+        expect_version: int | None = None,
+        n_buckets: int | None = None,
+    ) -> int | None:
+        """Atomically publish ``delta`` as the next version.
+
+        Optimistic concurrency: each attempt refreshes to the head and
+        re-resolves the delta against it, so a concurrent writer's
+        commits to buckets this delta did not touch are preserved
+        (disjoint writers compose). Overlapping buckets follow the
+        delta's ``expected`` preconditions (:meth:`BucketDelta.against`):
+        ``raise`` surfaces a true conflict; ``keep_fresh`` drops the
+        conflicted buckets and, when none remain, the whole commit — a
+        full no-op returns the head version without publishing. A lost
+        publication race (the store's hook returns None) retries."""
+        # summary values may be zero-arg callables (e.g. a lineage job
+        # running concurrently with the data write) — resolve them now,
+        # at the last moment before the commit is serialized.
+        summary = {k: (v() if callable(v) else v) for k, v in summary.items()}
+        # one identity across retries (the log store's TOCTOU guard
+        # recognizes its own commit folded into a checkpoint by it)
+        commit_id = uuid.uuid4().hex
+        for _ in range(max_retries):
+            self.refresh()
+            head = self.version
+            if expect_version is not None and head != expect_version:
+                # whole-table precondition (rebucket): ANY concurrent
+                # commit invalidates the rewrite — re-read and retry via
+                # commit_with_retry, never silently clobber.
+                raise CommitConflict(
+                    f"table moved to v{head} (expected "
+                    f"v{expect_version}) during a whole-table rewrite"
+                )
+            if (
+                epoch_skip
+                and epoch is not None
+                and epoch[1] <= self.last_epoch(epoch[0])
+            ):
+                # Append-mode (merge-on-read) commits carry no bucket
+                # preconditions, so the CoW path's conflict-then-recheck
+                # never fires — this in-loop ledger check is what makes
+                # two concurrent appliers of the SAME epoch exactly-once
+                # (the loser sees the winner's marker and no-ops).
+                return None
+            # Merge-on-read tables fold by commit sequence — stamp EVERY
+            # entry with the version this attempt will publish
+            # (re-stamped on retry; the dicts are shared with ``delta``).
+            # Base entries need the stamp too: a blind append() landing
+            # AFTER a delta commit must outrank it in a "replace" fold,
+            # and an unstamped base entry would fold at seq 0 and lose
+            # to any older delta.
+            if self.merge_policy:
+                for fs in delta.entries.values():
+                    for e in fs:
+                        e["seq"] = head + 1
+            resolved = delta
+            if delta.expected is not None:
+                resolved = delta.against(
+                    self._bucket_map(buckets=[int(b) for b in delta.touched])
+                )
+                if resolved is None:
+                    return head
+            v = self._publish(resolved, schema_ref, summary, epoch, n_buckets, commit_id)
+            if v is not None:
+                return v
+        raise RuntimeError(f"commit contention: gave up after {max_retries} retries")
+
+    def _write_commit(
+        self,
+        mode: str,
+        df: DataFrame,
+        summary: dict[str, Any] | None,
+        epoch: tuple[str, int] | None,
+    ) -> int:
+        ref, schema = self._ensure_schema(df.schema)
+        new_buckets = self._write_data(align_to_schema(df, schema), ref)
+        return self._commit(
+            BucketDelta(mode, new_buckets),
+            ref,
+            {"operation": mode, **(summary or {})},
+            epoch=epoch,
+        )
+
+    def append(
+        self,
+        df: DataFrame,
+        summary: dict[str, Any] | None = None,
+        epoch: tuple[str, int] | None = None,
+    ) -> int:
+        """Blind append (no key resolution) with schema evolution."""
+        return self._write_commit("append", df, summary, epoch)
+
+    def overwrite(
+        self,
+        df: DataFrame,
+        summary: dict[str, Any] | None = None,
+        epoch: tuple[str, int] | None = None,
+    ) -> int:
+        """Replace the whole table contents (REPLACE strategy,
+        reference:src/etl_framework/plugins/loaders/sql_loader.py:191-203)."""
+        return self._write_commit("overwrite", df, summary, epoch)
+
+    def _read_view(self, buckets: list[int]) -> dict[str, list[dict[str, Any]]]:
+        """The file lists a rewrite of ``buckets`` reads — its commit's
+        ``expected`` preconditions."""
+        view = self._bucket_map(buckets=buckets)
+        return {str(b): list(view.get(str(b), [])) for b in buckets}
+
+    def merge(
+        self,
+        source: DataFrame,
+        resolve,
+        evolve_schema: T.StructType | None = None,
+        summary: dict[str, Any] | None = None,
+        epoch: tuple[str, int] | None = None,
+        touched: list[int] | None = None,
+        on_conflict: str = "raise",
+        mode: str | None = None,
+    ) -> int | None:
+        """Keyed MERGE. Two physical strategies behind one semantic:
+
+        - ``mode="cow"`` (copy-on-write, the default for tables created
+          without a ``merge_policy``): read only the buckets ``source``
+          touches, apply ``resolve(target_subset, source)``, rewrite
+          those buckets, carry every other bucket forward by reference.
+        - ``mode="mor"`` (merge-on-read, the default when the table has
+          a ``merge_policy``): ``resolve`` runs against an EMPTY target
+          (it must emit self-contained rows — per-key winners with
+          delete TOMBSTONES, never physical drops) and the result is
+          committed as per-epoch DELTA files appended to the touched
+          buckets. No target read, no bucket rewrite: write cost is
+          O(batch) regardless of bucket size. Reads fold the deltas per
+          the table's policy; ``compact`` collapses them back to base.
+          Returns ``None`` when ``epoch`` was already applied (the
+          in-commit ledger check — appends have no bucket preconditions
+          to conflict on).
+
+        ``resolve`` owns the row semantics (LWW upsert, delete handling);
+        this method owns IO minimization + atomic publication. Iceberg
+        equivalent: ``MERGE INTO t USING s ON keys WHEN MATCHED ... WHEN
+        NOT MATCHED ...``.
+
+        ``evolve_schema``: the *stored-shape* schema the source implies
+        (source itself may be CDC-enveloped and wider than the table);
+        defaults to ``source.schema``.
+
+        Concurrency: the per-bucket file lists this merge READ are passed
+        to the commit as ``expected`` preconditions, so a concurrent
+        writer that rewrote or appended to an overlapping bucket between
+        our read and our commit surfaces as ``CommitConflict``
+        (``on_conflict="raise"``, default — re-run the merge via
+        ``commit_with_retry``) instead of silently losing its files.
+        Disjoint-bucket writers still compose without conflict.
+        """
+        ref, current = self._ensure_schema(evolve_schema or source.schema)
+        if mode is None:
+            mode = "mor" if self.merge_policy else "cow"
+        if mode == "mor":
+            empty = align_to_schema(
+                self.spark.createDataFrame([], current), current
+            )
+            resolved = resolve(empty, source)
+            aligned = merge_salt_groups(
+                align_to_schema(resolved, current, keep=["_bucket"]),
+                self.key_columns,
+            )
+            new_buckets = self._write_data(aligned, ref, kind="delta")
+            return self._commit(
+                BucketDelta("append", new_buckets),
+                ref,
+                {
+                    "operation": "merge",
+                    "mor": True,
+                    "touched_buckets": sorted(int(b) for b in new_buckets),
+                    **(summary or {}),
+                },
+                epoch=epoch,
+                epoch_skip=True,
+            )
+
+        if touched is None:
+            touched = self.touched_buckets(source)
+        # Capture the file lists we are about to read — the commit's
+        # optimistic precondition (the cached head is stable; _commit
+        # refreshes separately).
+        read_view = self._read_view(touched)
+        target_subset = align_to_schema(self.read(buckets=touched), current)
+
+        resolved = resolve(target_subset, source)
+        aligned = align_to_schema(resolved, current, keep=["_bucket"])
+
+        new_buckets = self._write_data(aligned, ref)
+        return self._commit(
+            BucketDelta(
+                "replace",
+                new_buckets,
+                dropped=set(read_view) - set(new_buckets),
+                expected=read_view,
+                on_conflict=on_conflict,
+            ),
+            ref,
+            {"operation": "merge", "touched_buckets": touched, **(summary or {})},
+            epoch=epoch,
+        )
+
+    # -------------------------------------------------------- maintenance
+    def compact(
+        self,
+        buckets: list[int] | None = None,
+        min_files: int = 2,
+        summary: dict[str, Any] | None = None,
+    ) -> int:
+        """Rewrite fragmented buckets into one sorted file set each.
+
+        APPEND-heavy usage accumulates files per bucket (every append
+        extends the bucket's file list); at scale many small files slow
+        every subsequent scan and merge. Compaction reads only buckets
+        with >= ``min_files`` files, rewrites them key-sorted, and
+        carries every other bucket forward by reference — same
+        copy-on-write shape as merge, so it can run between ingest
+        epochs without blocking readers (old snapshots stay readable).
+        """
+        view = self._bucket_map(buckets=buckets)
+        frag = sorted(int(b) for b, fs in view.items() if len(fs) >= min_files)
+        if not frag:
+            return self.version
+        ref, schema = self._ensure_schema(self.schema)
+        expected = self._read_view(frag)
+        data = align_to_schema(self.read(buckets=frag), schema)
+        new_buckets = self._write_data(data, ref)
+        # ``expected`` precondition: a concurrent merge may have
+        # REWRITTEN (or a delete REMOVED) a fragged bucket after we read
+        # it — publishing compacted pre-change data would resurrect
+        # stale rows. keep_fresh drops our compaction for exactly those
+        # buckets; the concurrent writer's view wins.
+        return self._commit(
+            BucketDelta(
+                "replace",
+                new_buckets,
+                dropped=set(expected) - set(new_buckets),
+                expected=expected,
+                on_conflict="keep_fresh",
+            ),
+            ref,
+            {"operation": "compact", "buckets": frag, **(summary or {})},
+        )
+
+    def rebucket(self, n_buckets: int, summary: dict[str, Any] | None = None) -> int:
+        """Offline maintenance: rewrite the WHOLE table under a new
+        bucket count (a table sized for 1 TB keeps its create-time
+        width forever otherwise — at 100 TB each bucket becomes a
+        multi-TB merge unit). Copy-on-write and conflict-safe: the
+        commit carries a whole-table version precondition, so ANY
+        concurrent commit raises ``CommitConflict`` (re-run via
+        ``commit_with_retry``) instead of being clobbered. Epoch
+        ledgers (relay watermarks, stream markers) carry forward;
+        old snapshots stay readable under their own layout width."""
+        if n_buckets < 1:
+            raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+        pre = self.version
+        ref, schema = self._ensure_schema(self.schema)
+        data = align_to_schema(self.read(), schema)
+        new_buckets = self._write_data(data, ref, n_buckets=n_buckets)
+        v = self._commit(
+            BucketDelta("overwrite", new_buckets),
+            ref,
+            {
+                "operation": "rebucket",
+                "from_buckets": self.n_buckets,
+                **(summary or {}),
+            },
+            expect_version=pre,
+            n_buckets=n_buckets,
+        )
+        # _commit's final refresh already adopted the new width
+        assert self.n_buckets == n_buckets
+        return v
+
+    def delete_where(
+        self,
+        condition,
+        summary: dict[str, Any] | None = None,
+        ranges: dict[str, tuple] | None = None,
+    ) -> int:
+        """Delete rows matching ``condition``, rewriting ONLY the buckets
+        that contain matching rows. ``ranges`` (optional) is a
+        conservative ``{col: (lo, hi)}`` bound IMPLIED by the condition
+        (every matching row falls inside it) — the hit scan then skips
+        files whose stats cannot intersect it.
+
+        Two passes, both delta-proportional at scale:
+
+        1. a column-pruned scan (key + condition columns only) finds the
+           bucket ids with matches — GC'ing a handful of tombstones in a
+           100 TB table reads two columns and rewrites a few buckets, not
+           the table;
+        2. those buckets are re-read in full, filtered, and rewritten;
+           every other bucket is carried forward by reference at commit.
+
+        Concurrency: the rebase carries forward a concurrent writer's
+        commits to untouched buckets; if a TOUCHED bucket's file list
+        moved between our read and the commit, ``CommitConflict`` is
+        raised (failing loudly beats publishing a pre-read view that
+        would drop the other writer's files)."""
+        key = self.key_columns[0]
+        kcol = F.col(key).cast(self.schema[key].dataType)
+        hit = (
+            self.read(ranges=ranges)
+            .where(condition)
+            .select(bucket_expr(kcol, self.n_buckets).alias("b"))
+            .distinct()
+            .collect()
+        )
+        touched = sorted(r["b"] for r in hit)
+        if not touched:
+            return self.version
+        ref, _ = self._ensure_schema(self.schema)
+        read_view = self._read_view(touched)
+        # SQL DELETE semantics: remove rows where the condition is TRUE;
+        # rows where it evaluates NULL are KEPT. A bare ~condition would
+        # silently drop them — delete tombstones carry NULL payload
+        # columns, so e.g. delete_where(role == 'x') must not GC every
+        # tombstone that shares a bucket with a match (losing the stored
+        # (ts, _lsn) that no-ops late out-of-order events for that key).
+        kept = self.read(buckets=touched).where(
+            ~F.coalesce(condition, F.lit(False))
+        )
+        new_buckets = self._write_data(kept, ref)
+        return self._commit(
+            BucketDelta(
+                "replace",
+                new_buckets,
+                dropped=set(read_view) - set(new_buckets),
+                expected=read_view,
+                on_conflict="raise",
+            ),
+            ref,
+            {"operation": "delete", "touched_buckets": touched, **(summary or {})},
+        )
+
+    def compact_tombstones(self, older_than) -> int:
+        """Garbage-collect tombstones whose ``ts`` predates the log's
+        out-of-orderness bound (events older than this can no longer
+        arrive, so the tombstone has finished its job). The hit scan is
+        file-skipped via manifest stats: only files whose ``ts`` range
+        reaches below the bound are opened."""
+        return self.delete_where(
+            F.coalesce(F.col("_deleted"), F.lit(False)) & (F.col("ts") < F.lit(older_than)),
+            summary={"operation": "compact_tombstones"},
+            ranges={"ts": (None, older_than)},
+        )
+
+    def expire_snapshots(
+        self, keep_last: int = 10, grace_seconds: int = 3600
+    ) -> dict[str, int]:
+        """Expire old versions and garbage-collect unreferenced files
+        (Iceberg's ``expireSnapshots`` + orphan-file removal).
+
+        Keeps the newest ``keep_last`` versions; older version metadata
+        goes (shrinking the time-travel window — that is the point: a
+        sustained one-epoch-per-second ingest otherwise grows it without
+        bound). Data files — and the store's ``GC_METADATA_GLOB`` files —
+        referenced by NO surviving version are deleted only if older
+        than ``grace_seconds``, the standard guard against removing
+        files a concurrent writer has written but not yet committed;
+        commit directories left without data are pruned. Every format
+        returns the same keys."""
+        now = time.time()
+
+        def removable(fp: str) -> bool:
+            try:
+                return os.path.getmtime(fp) < now - grace_seconds
+            except OSError:
+                return False
+
+        expired, kept_from = self._expire_versions(keep_last)
+        live = self._referenced_files()
+
+        def gc(pattern: str) -> int:
+            return sum(
+                _unlink_data_file(fp)
+                for fp in glob.glob(os.path.join(self.path, pattern), recursive=True)
+                if os.path.relpath(fp, self.path) not in live and removable(fp)
+            )
+
+        n_data = gc(os.path.join(DATA_DIR, "**", "*.parquet"))
+        n_meta = gc(self.GC_METADATA_GLOB) if self.GC_METADATA_GLOB else 0
+        _prune_data_dirs(os.path.join(self.path, DATA_DIR))
+        self.refresh()
+        return {
+            "expired_snapshots": expired,
+            "deleted_data_files": n_data,
+            "deleted_shard_files": n_meta,
+            "kept_from_version": kept_from,
+        }
+
+
+class LakeTable(BucketedTable):
+    """A bucket-partitioned snapshot-versioned parquet table: the
+    :class:`BucketedTable` data plane over snapshot/shard manifests."""
+
+    GC_METADATA_GLOB = os.path.join(META_DIR, SHARD_DIR, "*.json")
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -639,12 +1361,7 @@ class LakeTable:
                 if n_buckets <= MANIFEST_INLINE_MAX
                 else -(-n_buckets // MANIFEST_TARGET_SHARDS)
             )
-        if merge_policy not in MERGE_POLICIES:
-            raise ValueError(
-                f"merge_policy must be one of {MERGE_POLICIES}, got {merge_policy!r}"
-            )
-        if merge_policy == "lww" and order_columns is None:
-            order_columns = ["ts", "_lsn"]
+        order_columns = check_merge_policy(merge_policy, order_columns)
         os.makedirs(meta, exist_ok=True)
         os.makedirs(os.path.join(meta, SHARD_DIR), exist_ok=True)
         os.makedirs(os.path.join(os.path.abspath(path), DATA_DIR), exist_ok=True)
@@ -654,7 +1371,7 @@ class LakeTable:
             "n_buckets": n_buckets,
             "manifest_shard_size": manifest_shard_size,
             "merge_policy": merge_policy,
-            "order_columns": list(order_columns or []),
+            "order_columns": order_columns,
             "schemas": {"0": json.loads(schema.json())},
         }
         with open(os.path.join(meta, "table.json"), "w") as f:
@@ -817,223 +1534,47 @@ class LakeTable:
             raise ValueError(f"unknown version {version} at {self.path}") from None
         return self._snapshot_from_json(s)
 
-    # -------------------------------------------------------------- reads
-    def _read_files(
-        self, entries: list[dict[str, Any]], with_seq: bool = False
-    ) -> DataFrame | None:
-        """Read manifest file entries, upcasting each schema group to the
-        current table schema. ``with_seq`` attaches each file's fold
-        sequence as ``_seq`` (delta entries carry their commit version;
-        base entries fold below every delta appended after them)."""
-        if not entries:
-            return None
-        groups: dict[tuple[int, int], list[str]] = {}
-        for e in entries:
-            seq = int(e.get("seq", 0)) if with_seq else 0
-            groups.setdefault((int(e["schema_id"]), seq), []).append(
-                os.path.join(self.path, e["path"])
-            )
-        current = self.schema
-        parts = []
-        for (sid, seq), files in groups.items():
-            df = self.spark.read.schema(self._schemas[sid]).parquet(*files)
-            df = align_to_schema(df, current)
-            if with_seq:
-                df = df.withColumn("_seq", F.lit(seq))
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _fold(self, df: DataFrame) -> DataFrame:
-        return fold_deltas(df, self.key_columns, self.order_columns)
-
-    def read(
-        self,
-        buckets: list[int] | None = None,
-        version: int | None = None,
-        ranges: dict[str, tuple] | None = None,
-    ) -> DataFrame:
-        """Snapshot as a DataFrame; optionally only some buckets and/or a
-        historical ``version`` (time travel — old data files are never
-        mutated, only dereferenced, so any committed version stays
-        readable until GC).
-
-        ``ranges`` — ``{col: (lo, hi)}`` scan bounds (either side may be
-        None): files whose recorded min/max stats prove no row matches
-        are skipped entirely (Iceberg metrics-based file skipping). The
-        bounds only PRUNE — the caller still applies its row filter.
-        Pruning is disabled per-bucket while that bucket needs the
-        merge-on-read fold (unfolded deltas, or base entries from
-        multiple commits): dropping a file there could promote a
-        superseded row version to fold winner, changing results, not
-        just cost. Likewise the fold itself is scoped to those buckets
-        (:func:`split_fold_entries`) — a small delta must not drag
-        every clean bucket through the union+window."""
-        snap = self.snapshot if version is None else self.snapshot_at(version)
-        # bucket selection loads only the covering manifest shards
-        bmap = snap.buckets if buckets is None else snap.buckets_for(buckets)
-        df = scoped_fold_read(
-            bmap,
-            ranges,
-            lambda entries, with_seq: self._read_files(entries, with_seq=with_seq),
-            self._fold,
-        )
-        if df is None:
-            return self.spark.createDataFrame([], self.schema)
-        return df
-
-    def current(
-        self,
-        buckets: list[int] | None = None,
-        version: int | None = None,
-        ranges: dict[str, tuple] | None = None,
-    ) -> DataFrame:
-        """Live rows: ``read()`` minus delete tombstones (if the table
-        carries the ``_deleted`` system column)."""
-        df = self.read(buckets=buckets, version=version, ranges=ranges)
-        if "_deleted" in df.columns:
-            df = df.where(~F.coalesce(F.col("_deleted"), F.lit(False)))
-        return df
-
-    def changes_between(self, v_from: int, v_to: int) -> DataFrame:
-        """Row-level change feed between two committed versions (CDC-out):
-        one row per key whose state changed, with ``_change_type`` I/U/D.
-
-        Bucket-pruned: only buckets whose file lists differ between the
-        snapshots are read (copy-on-write rewrites whole buckets, so an
-        identical file list ⇒ identical content). The diff itself is a
-        full-outer join on the key within those buckets:
-        new-only ⇒ I, both-with-newer-lsn ⇒ U, old-live-but-now-gone or
-        tombstoned ⇒ D.
-        """
-        old_snap, new_snap = self.snapshot_at(v_from), self.snapshot_at(v_to)
-        if old_snap.sharded and new_snap.sharded:
-            # shard files are immutable: identical shard reference =>
-            # identical content for every bucket it covers — only load
-            # and diff shards whose reference moved.
-            ob, nb = {}, {}
-            for idx in set(old_snap.shards) | set(new_snap.shards):
-                if old_snap.shards.get(idx) != new_snap.shards.get(idx):
-                    ob.update(old_snap._load_shard(idx))
-                    nb.update(new_snap._load_shard(idx))
-        else:
-            ob, nb = old_snap.buckets, new_snap.buckets
-        changed = [b for b in set(ob) | set(nb) if ob.get(b) != nb.get(b)]
-        changed_ids = sorted(int(b) for b in changed)
-        from etl_framework_spark.lakehouse.feed import (
-            delta_fast_path,
-            diff_versions,
-        )
-
-        # Delta-only interval ⇒ key-scoped feed: only keys in the
-        # appended delta files can have changed; the diff folds those
-        # keys' old winners with the delta rows instead of scanning and
-        # windowing two full bucket states.
-        delta_rows, added = delta_fast_path(
-            {b: ob.get(b, []) for b in changed},
-            {b: nb.get(b, []) for b in changed},
-            lambda entries: self._read_files(entries, with_seq=True),
-        )
-        return diff_versions(
-            self, v_from, v_to, changed_ids,
-            delta_rows=delta_rows, delta_entries=added,
-        )
-
-    def compact_tombstones(self, older_than) -> int:
-        """Garbage-collect tombstones whose ``ts`` predates the log's
-        out-of-orderness bound (events older than this can no longer
-        arrive, so the tombstone has finished its job). The hit scan is
-        file-skipped via manifest stats: only files whose ``ts`` range
-        reaches below the bound are opened."""
-        return self.delete_where(
-            F.coalesce(F.col("_deleted"), F.lit(False)) & (F.col("ts") < F.lit(older_than)),
-            summary={"operation": "compact_tombstones"},
-            ranges={"ts": (None, older_than)},
-        )
-
-    def touched_buckets(self, source: DataFrame) -> list[int]:
-        """Buckets a source batch lands in (small: <= n_buckets rows).
-
-        The source key is CAST to the table's key type before hashing:
-        xxhash64 is type-sensitive, so an int batch merged into a
-        long-keyed table (which ``merge_schemas`` permits) would
-        otherwise compute a wrong touched set and leave stale row
-        versions alive in the real bucket."""
-        key = self.key_columns[0]
-        ktype = self.schema[key].dataType
-        rows = (
-            source.select(
-                bucket_expr(F.col(key).cast(ktype), self.n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return sorted(r["b"] for r in rows)
-
-    # ------------------------------------------------------------- writes
-    def _stats_columns(self, schema: T.StructType) -> list[str]:
-        return stats_columns_for(schema, self.key_columns, self.order_columns)
-
-    def _write_data(
-        self,
-        df: DataFrame,
-        schema_id: int,
-        kind: str | None = None,
-        n_buckets: int | None = None,
+    # ------------------------------------------------ data-plane hooks
+    def _bucket_map(
+        self, version: int | None = None, buckets: list[int] | None = None
     ) -> dict[str, list[dict[str, Any]]]:
-        """Write df (already aligned to schema_id's schema) bucket-
-        partitioned; returns bucket -> manifest entries.
+        # bucket selection loads only the covering manifest shards
+        snap = self.snapshot if version is None else self.snapshot_at(version)
+        return snap.buckets if buckets is None else snap.buckets_for(buckets)
 
-        If ``df`` already carries a ``_bucket`` column (the single-shuffle
-        resolver emits data repartitioned by bucket and key-sorted), it is
-        written as-is — no extra exchange or sort.
+    def _diff_maps(self, v_from: int, v_to: int) -> tuple[dict, dict]:
+        old_snap, new_snap = self.snapshot_at(v_from), self.snapshot_at(v_to)
+        if not (old_snap.sharded and new_snap.sharded):
+            return old_snap.buckets, new_snap.buckets
+        # shard files are immutable: identical shard reference =>
+        # identical content for every bucket it covers — only load and
+        # diff shards whose reference moved.
+        ob: dict[str, list[dict[str, Any]]] = {}
+        nb: dict[str, list[dict[str, Any]]] = {}
+        for idx in set(old_snap.shards) | set(new_snap.shards):
+            if old_snap.shards.get(idx) != new_snap.shards.get(idx):
+                ob.update(old_snap._load_shard(idx))
+                nb.update(new_snap._load_shard(idx))
+        return ob, nb
 
-        ``kind="delta"`` tags the entries as merge-on-read deltas (the
-        commit stamps their fold sequence); ``n_buckets`` overrides the
-        layout width (``rebucket``)."""
-        commit_id = uuid.uuid4().hex[:16]
-        out_dir = os.path.join(self.path, DATA_DIR, commit_id)
-        schema = self._schemas[schema_id]
-        if "_bucket" in df.columns:
-            keyed = df
-        else:
-            # One shuffle, partitioned by bucket so each output dir is
-            # written by the tasks owning that bucket; file count per
-            # bucket stays low.
-            keyed = (
-                df.withColumn(
-                    "_bucket",
-                    bucket_expr(self.key_columns[0], n_buckets or self.n_buckets),
-                )
-                .repartition("_bucket")
-                .sortWithinPartitions(*self.key_columns)
-            )
-        keyed.write.partitionBy("_bucket").parquet(out_dir, mode="overwrite")
-        stats_cols = self._stats_columns(schema)
-        files: list[tuple[str, str]] = []
-        for bdir in glob.glob(os.path.join(out_dir, "_bucket=*")):
-            b = bdir.rsplit("=", 1)[1]
-            for fp in glob.glob(os.path.join(bdir, "*.parquet")):
-                files.append((b, fp))
-        # Footer-only metadata reads (Iceberg manifest metrics analog) —
-        # let bounded reads skip files. Parallel: a commit can produce
-        # hundreds of files (buckets x salt groups) and a sequential
-        # footer loop measurably taxes the apply hot path; a real
-        # deployment computes these executor-side inside the write tasks.
-        ranges = collect_file_ranges([fp for _, fp in files], stats_cols)
-        buckets: dict[str, list[dict[str, Any]]] = {}
-        for b, fp in files:
-            rel = os.path.relpath(fp, self.path)
-            entry: dict[str, Any] = {"path": rel, "schema_id": schema_id}
-            if kind == "delta":
-                entry["kind"] = "delta"
-            st = ranges.get(fp)
-            if st:
-                entry["stats"] = st
-            buckets.setdefault(b, []).append(entry)
-        return buckets
+    def _schema_of(self, ref: int) -> T.StructType:
+        return self._schemas[int(ref)]
+
+    def _register_schema(self, merged: T.StructType, changed: bool) -> int:
+        """Integer schema ids, appended to ``table.json``."""
+        if not changed:
+            return self.snapshot.schema_id
+        new_id = max(self._schemas) + 1
+        self._schemas[new_id] = merged
+        meta = os.path.join(self.path, META_DIR)
+        with open(os.path.join(meta, "table.json")) as f:
+            tm = json.load(f)
+        tm["schemas"][str(new_id)] = json.loads(merged.json())
+        tmp = os.path.join(meta, f".tmp-{uuid.uuid4().hex}.json")
+        with open(tmp, "w") as f:
+            json.dump(tm, f)
+        os.replace(tmp, os.path.join(meta, "table.json"))
+        return new_id
 
     def _write_shard(self, content: dict[str, list[dict[str, Any]]]) -> str:
         """Persist one immutable manifest shard; returns its relpath."""
@@ -1063,492 +1604,65 @@ class LakeTable:
                 new_shards.pop(idx, None)
         return new_shards
 
-    def _commit(
+    def _publish(
         self,
         delta: BucketDelta,
         schema_id: int,
         summary: dict[str, Any],
-        epoch: tuple[str, int] | None = None,
-        max_retries: int = 10,
-        epoch_skip: bool = False,
-        expect_version: int | None = None,
-        n_buckets: int | None = None,
+        epoch: tuple[str, int] | None,
+        n_buckets: int | None,
+        commit_id: str,
     ) -> int | None:
-        """Atomically publish a new snapshot from a BucketDelta.
-
-        Optimistic concurrency: the hard-link commit fails if another
-        writer took the version; the delta is re-applied against the
-        freshly-loaded snapshot and retried — so a concurrent writer's
-        commits to buckets this delta did not touch are preserved
-        (disjoint writers compose; overlapping buckets follow the
-        delta's mode/conflict policy, and ``expected`` preconditions
-        surface true conflicts instead of silently losing files)."""
+        """Link the next snapshot file (the whole epoch ledger and the
+        bucket map, or its shard references, ride inside it)."""
+        snap = self.snapshot
+        new_epochs = dict(snap.epochs)
+        if epoch is not None:
+            new_epochs[epoch[0]] = max(int(new_epochs.get(epoch[0], -1)), epoch[1])
+        new: dict[str, Any] = {
+            "version": snap.version + 1,
+            # Schema ids are monotone (evolution only appends); a
+            # maintenance commit (compact/delete) planned against a
+            # PRE-evolution snapshot must not regress the table to
+            # its stale schema_id — readers would silently drop the
+            # evolved columns until the next evolving write. Found
+            # by the chaos soak: compact raced a mid-stream schema
+            # widening and un-evolved the table for a window.
+            "schema_id": max(schema_id, snap.schema_id),
+            "summary": summary,
+            "epochs": new_epochs,
+        }
+        eff_buckets = n_buckets or snap.n_buckets
+        if eff_buckets:
+            # layout width travels with every snapshot once a
+            # rebucket changed it (table.json keeps the create value)
+            new["n_buckets"] = int(eff_buckets)
+        if snap.sharded:
+            new["shards"] = self._sharded_map(delta, snap)
+        else:
+            new["buckets"] = delta.apply(snap.buckets)
         meta = os.path.join(self.path, META_DIR)
-        # summary values may be zero-arg callables (e.g. a lineage job
-        # running concurrently with the data write) — resolve them now,
-        # at the last moment before the snapshot is serialized.
-        summary = {k: (v() if callable(v) else v) for k, v in summary.items()}
-        for _ in range(max_retries):
-            self._load_meta()
-            snap = self.snapshot
-            if expect_version is not None and snap.version != expect_version:
-                # whole-table precondition (rebucket): ANY concurrent
-                # commit invalidates the rewrite — re-read and retry via
-                # commit_with_retry, never silently clobber.
-                raise CommitConflict(
-                    f"table moved to v{snap.version} (expected "
-                    f"v{expect_version}) during a whole-table rewrite"
-                )
-            if (
-                epoch_skip
-                and epoch is not None
-                and epoch[1] <= int(snap.epochs.get(epoch[0], -1))
-            ):
-                # Append-mode (merge-on-read) commits carry no bucket
-                # preconditions, so the CoW path's conflict-then-recheck
-                # never fires — this in-loop ledger check is what makes
-                # two concurrent appliers of the SAME epoch exactly-once
-                # (the loser sees the winner's marker and no-ops).
-                return None
-            new_epochs = dict(snap.epochs)
-            if epoch is not None:
-                new_epochs[epoch[0]] = max(int(new_epochs.get(epoch[0], -1)), epoch[1])
-            # Merge-on-read tables fold by commit sequence — stamp EVERY
-            # entry with the version this attempt will publish
-            # (re-stamped on retry; the dicts are shared with ``delta``).
-            # Base entries need the stamp too: a blind append() landing
-            # AFTER a delta commit must outrank it in a "replace" fold,
-            # and an unstamped base entry would fold at seq 0 and lose
-            # to any older delta (round-5 review finding).
-            if self.merge_policy:
-                for fs in delta.entries.values():
-                    for e in fs:
-                        e["seq"] = snap.version + 1
-            new: dict[str, Any] = {
-                "version": snap.version + 1,
-                # Schema ids are monotone (evolution only appends); a
-                # maintenance commit (compact/delete) planned against a
-                # PRE-evolution snapshot must not regress the table to
-                # its stale schema_id — readers would silently drop the
-                # evolved columns until the next evolving write. Found
-                # by the chaos soak: compact raced a mid-stream schema
-                # widening and un-evolved the table for a window.
-                "schema_id": max(schema_id, snap.schema_id),
-                "summary": summary,
-                "epochs": new_epochs,
-            }
-            eff_buckets = n_buckets or snap.n_buckets
-            if eff_buckets:
-                # layout width travels with every snapshot once a
-                # rebucket changed it (table.json keeps the create value)
-                new["n_buckets"] = int(eff_buckets)
-            if snap.sharded:
-                new["shards"] = self._sharded_map(delta, snap)
-            else:
-                new["buckets"] = delta.apply(snap.buckets)
-            tmp = os.path.join(meta, f".tmp-{uuid.uuid4().hex}.json")
-            with open(tmp, "w") as f:
-                json.dump(new, f)
-            final = os.path.join(meta, "v%012d.json" % new["version"])
-            try:
-                os.link(tmp, final)
-                os.unlink(tmp)
-                self._write_latest_hint(new["version"])
-                self._load_meta()
-                return new["version"]
-            except FileExistsError:
-                os.unlink(tmp)
-                continue
-        raise RuntimeError(f"commit contention: gave up after {max_retries} retries")
-
-    def _ensure_schema(self, incoming: T.StructType) -> int:
-        """Evolve table schema to accept ``incoming``; returns schema_id."""
-        merged, changed = merge_schemas(self.schema, incoming)
-        if not changed:
-            return self.snapshot.schema_id
-        # The BUCKET key column (key_columns[0], the only hash input) may
-        # never change type: xxhash64 is type-sensitive, so widening it
-        # would silently split each key's rows across two buckets (old
-        # writes hashed narrow, new writes hashed wide). Other key
-        # columns may widen freely (they only join sorts/windows, which
-        # cast), and narrower *batches* are fine — upcast before
-        # hashing/writing.
-        k = self.key_columns[0] if self.key_columns else None
-        if k is not None:
-            cur = {f.name: f.dataType for f in self.schema.fields}
-            new = {f.name: f.dataType for f in merged.fields}
-            if k in cur and new.get(k) != cur[k]:
-                raise SchemaEvolutionError(
-                    f"key column {k!r} cannot change type "
-                    f"({cur[k].simpleString()} -> {new[k].simpleString()}): "
-                    "bucket hashing is type-sensitive"
-                )
-        new_id = max(self._schemas) + 1
-        self._schemas[new_id] = merged
-        meta = os.path.join(self.path, META_DIR)
-        with open(os.path.join(meta, "table.json")) as f:
-            tm = json.load(f)
-        tm["schemas"][str(new_id)] = json.loads(merged.json())
-        tmp = os.path.join(meta, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(tm, f)
-        os.replace(tmp, os.path.join(meta, "table.json"))
-        return new_id
-
-    def append(
-        self,
-        df: DataFrame,
-        summary: dict[str, Any] | None = None,
-        epoch: tuple[str, int] | None = None,
-    ) -> int:
-        """Blind append (no key resolution) with schema evolution."""
-        sid = self._ensure_schema(df.schema)
-        aligned = align_to_schema(df, self._schemas[sid])
-        new_buckets = self._write_data(aligned, sid)
-        return self._commit(
-            BucketDelta("append", new_buckets),
-            sid,
-            {"operation": "append", **(summary or {})},
-            epoch=epoch,
-        )
-
-    def overwrite(
-        self,
-        df: DataFrame,
-        summary: dict[str, Any] | None = None,
-        epoch: tuple[str, int] | None = None,
-    ) -> int:
-        """Replace the whole table contents (REPLACE strategy,
-        reference:src/etl_framework/plugins/loaders/sql_loader.py:191-203)."""
-        sid = self._ensure_schema(df.schema)
-        aligned = align_to_schema(df, self._schemas[sid])
-        new_buckets = self._write_data(aligned, sid)
-        return self._commit(
-            BucketDelta("overwrite", new_buckets),
-            sid,
-            {"operation": "overwrite", **(summary or {})},
-            epoch=epoch,
-        )
-
-    def merge(
-        self,
-        source: DataFrame,
-        resolve,
-        evolve_schema: T.StructType | None = None,
-        summary: dict[str, Any] | None = None,
-        epoch: tuple[str, int] | None = None,
-        touched: list[int] | None = None,
-        on_conflict: str = "raise",
-        mode: str | None = None,
-    ) -> int | None:
-        """Keyed MERGE. Two physical strategies behind one semantic:
-
-        - ``mode="cow"`` (copy-on-write, the default for tables created
-          without a ``merge_policy``): read only the buckets ``source``
-          touches, apply ``resolve(target_subset, source)``, rewrite
-          those buckets, carry every other bucket forward by reference.
-        - ``mode="mor"`` (merge-on-read, the default when the table has
-          a ``merge_policy``): ``resolve`` runs against an EMPTY target
-          (it must emit self-contained rows — per-key winners with
-          delete TOMBSTONES, never physical drops) and the result is
-          committed as per-epoch DELTA files appended to the touched
-          buckets. No target read, no bucket rewrite: write cost is
-          O(batch) regardless of bucket size. Reads fold the deltas per
-          the table's policy; ``compact`` collapses them back to base.
-          Returns ``None`` when ``epoch`` was already applied (the
-          in-commit ledger check — appends have no bucket preconditions
-          to conflict on).
-
-        ``resolve`` owns the row semantics (LWW upsert, delete handling);
-        this method owns IO minimization + atomic publication. Iceberg
-        equivalent: ``MERGE INTO t USING s ON keys WHEN MATCHED ... WHEN
-        NOT MATCHED ...``.
-
-        ``evolve_schema``: the *stored-shape* schema the source implies
-        (source itself may be CDC-enveloped and wider than the table);
-        defaults to ``source.schema``.
-
-        Concurrency: the per-bucket file lists this merge READ are passed
-        to the commit as ``expected`` preconditions, so a concurrent
-        writer that rewrote or appended to an overlapping bucket between
-        our read and our commit surfaces as ``CommitConflict``
-        (``on_conflict="raise"``, default — re-run the merge via
-        ``commit_with_retry``) instead of silently losing its files.
-        Disjoint-bucket writers still compose without conflict.
-        """
-        sid = self._ensure_schema(evolve_schema or source.schema)
-        current = self._schemas[sid]
-        if mode is None:
-            mode = "mor" if self.merge_policy else "cow"
-        if mode == "mor":
-            empty = align_to_schema(
-                self.spark.createDataFrame([], current), current
-            )
-            resolved = resolve(empty, source)
-            aligned = merge_salt_groups(
-                align_to_schema(resolved, current, keep=["_bucket"]),
-                self.key_columns,
-            )
-            new_buckets = self._write_data(aligned, sid, kind="delta")
-            return self._commit(
-                BucketDelta("append", new_buckets),
-                sid,
-                {
-                    "operation": "merge",
-                    "mor": True,
-                    "touched_buckets": sorted(int(b) for b in new_buckets),
-                    **(summary or {}),
-                },
-                epoch=epoch,
-                epoch_skip=True,
-            )
-
-        if touched is None:
-            touched = self.touched_buckets(source)
-        # Capture the file lists we are about to read — the commit's
-        # optimistic precondition (snapshot object is stable; _commit
-        # reloads meta separately).
-        read_view = self.snapshot.buckets_for(touched)
-        read_view = {str(b): list(read_view.get(str(b), [])) for b in touched}
-        target_subset = align_to_schema(self.read(buckets=touched), current)
-
-        resolved = resolve(target_subset, source)
-        aligned = align_to_schema(resolved, current, keep=["_bucket"])
-
-        new_buckets = self._write_data(aligned, sid)
-        dropped = {str(b) for b in touched} - set(new_buckets)
-        return self._commit(
-            BucketDelta(
-                "replace",
-                new_buckets,
-                dropped=dropped,
-                expected=read_view,
-                on_conflict=on_conflict,
-            ),
-            sid,
-            {"operation": "merge", "touched_buckets": touched, **(summary or {})},
-            epoch=epoch,
-        )
-
-    def expire_snapshots(
-        self, keep_last: int = 10, grace_seconds: int = 3600
-    ) -> dict[str, int]:
-        """Expire old snapshots and garbage-collect unreferenced files
-        (Iceberg's ``expireSnapshots`` + orphan-file removal).
-
-        Keeps the newest ``keep_last`` versions; older snapshot files
-        are deleted (shrinking the time-travel window — that is the
-        point: a sustained one-epoch-per-second ingest otherwise grows
-        the version directory without bound). Data and manifest-shard
-        files referenced by NO surviving snapshot are deleted only if
-        older than ``grace_seconds`` — the standard guard against
-        removing files a concurrent writer has written but not yet
-        committed.
-        """
-        import time
-
-        meta = os.path.join(self.path, META_DIR)
-        latest = self._latest_version(meta)
-        cutoff = latest - keep_last + 1
-        live_data: set[str] = set()
-        live_shards: set[str] = set()
-        expired: list[int] = []
-        for p in glob.glob(os.path.join(meta, "v*.json")):
-            v = int(os.path.basename(p)[1:-5])
-            if v < cutoff:
-                expired.append(v)
-                continue
-            snap = self.snapshot_at(v)
-            if snap.sharded:
-                live_shards.update(snap.shards.values())
-            for files in snap.buckets.values():
-                live_data.update(e["path"] for e in files)
-        now = time.time()
-
-        def removable(fp: str) -> bool:
-            try:
-                return os.path.getmtime(fp) < now - grace_seconds
-            except OSError:
-                return False
-
-        n_data = 0
-        data_root = os.path.join(self.path, DATA_DIR)
-        for fp in glob.glob(os.path.join(data_root, "**", "*.parquet"), recursive=True):
-            if os.path.relpath(fp, self.path) not in live_data and removable(fp):
-                os.unlink(fp)
-                n_data += 1
-        # drop now-empty commit directories
-        for d in sorted(glob.glob(os.path.join(data_root, "*", "*")), reverse=True) + sorted(
-            glob.glob(os.path.join(data_root, "*")), reverse=True
-        ):
-            if os.path.isdir(d) and not os.listdir(d):
-                os.rmdir(d)
-        n_shards = 0
-        for fp in glob.glob(os.path.join(meta, SHARD_DIR, "*.json")):
-            rel = os.path.relpath(fp, self.path)
-            if rel not in live_shards and removable(fp):
-                os.unlink(fp)
-                n_shards += 1
-        for v in expired:
-            os.unlink(os.path.join(meta, "v%012d.json" % v))
+        if not link_json(meta, "v%012d.json" % new["version"], new):
+            return None
+        self._write_latest_hint(new["version"])
         self._load_meta()
-        return {
-            "expired_snapshots": len(expired),
-            "deleted_data_files": n_data,
-            "deleted_shard_files": n_shards,
-            "kept_from_version": max(cutoff, 0),
-        }
+        return new["version"]
 
-    def file_stats(self) -> dict[str, Any]:
-        """Files-per-bucket distribution (the maintenance trigger
-        signal): total/max files per bucket, plus the merge-on-read
-        delta share — metadata-only, no data IO."""
-        counts: dict[str, int] = {}
-        delta_counts: dict[str, int] = {}
-        for b, fs in self.snapshot.buckets.items():
-            counts[b] = len(fs)
-            delta_counts[b] = sum(1 for e in fs if e.get("kind") == "delta")
-        return {
-            "n_buckets_with_data": len(counts),
-            "total_files": sum(counts.values()),
-            "max_files_per_bucket": max(counts.values(), default=0),
-            "delta_files": sum(delta_counts.values()),
-            "max_delta_files_per_bucket": max(delta_counts.values(), default=0),
-            "delta_buckets": sum(1 for v in delta_counts.values() if v > 0),
-        }
+    def _expire_versions(self, keep_last: int) -> tuple[int, int]:
+        meta = os.path.join(self.path, META_DIR)
+        cutoff = self._latest_version(meta) - keep_last + 1
+        expired = 0
+        for p in glob.glob(os.path.join(meta, "v*.json")):
+            if int(os.path.basename(p)[1:-5]) < cutoff:
+                os.unlink(p)
+                expired += 1
+        return expired, max(cutoff, 0)
 
-    def compact(
-        self,
-        buckets: list[int] | None = None,
-        min_files: int = 2,
-        summary: dict[str, Any] | None = None,
-    ) -> int:
-        """Rewrite fragmented buckets into one sorted file set each.
-
-        APPEND-heavy usage accumulates files per bucket (every append
-        extends the bucket's file list); at scale many small files slow
-        every subsequent scan and merge. Compaction reads only buckets
-        with >= ``min_files`` files, rewrites them key-sorted, and
-        carries every other bucket forward by reference — same
-        copy-on-write shape as merge, so it can run between ingest
-        epochs without blocking readers (old snapshots stay readable).
-        """
-        snap = self.snapshot
-        view = (
-            snap.buckets if buckets is None else snap.buckets_for(buckets)
-        )
-        frag = [int(b) for b, fs in view.items() if len(fs) >= min_files]
-        if not frag:
-            return snap.version
-        sid = snap.schema_id
-        data = align_to_schema(self.read(buckets=frag), self._schemas[sid])
-        new_buckets = self._write_data(data, sid)
-        # ``expected`` precondition: a concurrent merge may have
-        # REWRITTEN (or a delete REMOVED) a fragged bucket after we read
-        # it — publishing compacted pre-change data would resurrect
-        # stale rows. keep_fresh drops our compaction for exactly those
-        # buckets; the concurrent writer's view wins.
-        expected = {str(b): view.get(str(b), []) for b in frag}
-        return self._commit(
-            BucketDelta(
-                "replace", new_buckets, expected=expected, on_conflict="keep_fresh"
-            ),
-            sid,
-            {"operation": "compact", "buckets": frag, **(summary or {})},
-        )
-
-    def rebucket(self, n_buckets: int, summary: dict[str, Any] | None = None) -> int:
-        """Offline maintenance: rewrite the WHOLE table under a new
-        bucket count (a table sized for 1 TB keeps its create-time
-        width forever otherwise — at 100 TB each bucket becomes a
-        multi-TB merge unit). Copy-on-write and conflict-safe: the
-        commit carries a whole-table version precondition, so ANY
-        concurrent commit raises ``CommitConflict`` (re-run via
-        ``commit_with_retry``) instead of being clobbered. Epoch
-        ledgers (relay watermarks, stream markers) carry forward;
-        old snapshots stay readable under their own layout width."""
-        if n_buckets < 1:
-            raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        pre = self.version
-        sid = self.snapshot.schema_id
-        data = align_to_schema(self.read(), self._schemas[sid])
-        new_buckets = self._write_data(data, sid, n_buckets=n_buckets)
-        v = self._commit(
-            BucketDelta("overwrite", new_buckets),
-            sid,
-            {
-                "operation": "rebucket",
-                "from_buckets": self.n_buckets,
-                **(summary or {}),
-            },
-            expect_version=pre,
-            n_buckets=n_buckets,
-        )
-        # _commit's final _load_meta already adopted the new width
-        assert self.n_buckets == n_buckets
-        return v
-
-    def delete_where(
-        self,
-        condition,
-        summary: dict[str, Any] | None = None,
-        ranges: dict[str, tuple] | None = None,
-    ) -> int:
-        """Delete rows matching ``condition``, rewriting ONLY the buckets
-        that contain matching rows. ``ranges`` (optional) is a
-        conservative ``{col: (lo, hi)}`` bound IMPLIED by the condition
-        (every matching row falls inside it) — the hit scan then skips
-        files whose stats cannot intersect it.
-
-        Two passes, both delta-proportional at scale:
-
-        1. a column-pruned scan (key + condition columns only) finds the
-           bucket ids with matches — GC'ing a handful of tombstones in a
-           100 TB table reads two columns and rewrites a few buckets, not
-           the table;
-        2. those buckets are re-read in full, filtered, and rewritten;
-           every other bucket is carried forward by reference at commit.
-
-        Concurrency: the rebase carries forward a concurrent writer's
-        commits to untouched buckets; if a TOUCHED bucket's file list
-        moved between our read and the commit, ``CommitConflict`` is
-        raised (failing loudly beats publishing a pre-read view that
-        would drop the other writer's files)."""
-        snap = self.snapshot
-        sid = snap.schema_id
-        key = self.key_columns[0]
-        kcol = F.col(key).cast(self.schema[key].dataType)
-        hit = (
-            self.read(ranges=ranges)
-            .where(condition)
-            .select(bucket_expr(kcol, self.n_buckets).alias("b"))
-            .distinct()
-            .collect()
-        )
-        touched = sorted(r["b"] for r in hit)
-        if not touched:
-            return snap.version
-        read_view = snap.buckets_for(touched)
-        read_view = {str(b): list(read_view.get(str(b), [])) for b in touched}
-        # SQL DELETE semantics: remove rows where the condition is TRUE;
-        # rows where it evaluates NULL are KEPT. A bare ~condition would
-        # silently drop them — delete tombstones carry NULL payload
-        # columns, so e.g. delete_where(role == 'x') must not GC every
-        # tombstone that shares a bucket with a match (losing the stored
-        # (ts, _lsn) that no-ops late out-of-order events for that key).
-        kept = self.read(buckets=touched).where(
-            ~F.coalesce(condition, F.lit(False))
-        )
-        new_buckets = self._write_data(kept, sid)
-        dropped = set(read_view) - set(new_buckets)
-        return self._commit(
-            BucketDelta(
-                "replace",
-                new_buckets,
-                dropped=dropped,
-                expected=read_view,
-                on_conflict="raise",
-            ),
-            sid,
-            {"operation": "delete", "touched_buckets": touched, **(summary or {})},
-        )
+    def _referenced_files(self) -> set[str]:
+        live: set[str] = set()
+        for p in glob.glob(os.path.join(self.path, META_DIR, "v*.json")):
+            snap = self.snapshot_at(int(os.path.basename(p)[1:-5]))
+            live.update(snap.shards.values())
+            for files in snap.buckets.values():
+                live.update(e["path"] for e in files)
+        return live

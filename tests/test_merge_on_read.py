@@ -28,6 +28,7 @@ from etl_framework_spark.lakehouse import (
     DirTable,
     LakeTable,
 )
+from etl_framework_spark.lakehouse.table import BucketDelta
 from etl_framework_spark.schemas import (
     CHANGE_SCHEMA,
     CHANGE_SCHEMA_EVOLVED,
@@ -450,47 +451,24 @@ def test_rebucket_conflicts_with_concurrent_commit(spark, tmp_path, impl):
     t.refresh()
     pre = t.version
     data = t.read()
-    if isinstance(t, LakeTable):
-        sid = t.snapshot.schema_id
-        new_buckets = t._write_data(data, sid, n_buckets=8)
-        # a concurrent writer lands between the read and the commit
-        other = type(t)(spark, path)
-        apply_changes(
-            other,
-            _ch(spark, [("U", 50_000, _ts(50_000), "conv-r", 0, "u", "x", None)]),
-            stream_id="s",
-            epoch_id=1,
+    ref, _ = t._ensure_schema(t.schema)
+    new_buckets = t._write_data(data, ref, n_buckets=8)
+    # a concurrent writer lands between the read and the commit
+    other = type(t)(spark, path)
+    apply_changes(
+        other,
+        _ch(spark, [("U", 50_000, _ts(50_000), "conv-r", 0, "u", "x", None)]),
+        stream_id="s",
+        epoch_id=1,
+    )
+    with pytest.raises(CommitConflict):
+        t._commit(
+            BucketDelta("overwrite", new_buckets),
+            ref,
+            {"operation": "rebucket"},
+            expect_version=pre,
+            n_buckets=8,
         )
-        from etl_framework_spark.lakehouse.table import BucketDelta
-
-        with pytest.raises(CommitConflict):
-            t._commit(
-                BucketDelta("overwrite", new_buckets),
-                sid,
-                {"operation": "rebucket"},
-                expect_version=pre,
-                n_buckets=8,
-            )
-    else:
-        h, schema = t._ensure_schema(t.schema)
-        adds = t._write_data(data, h, schema=schema, n_buckets=8)
-        other = type(t)(spark, path)
-        apply_changes(
-            other,
-            _ch(spark, [("U", 50_000, _ts(50_000), "conv-r", 0, "u", "x", None)]),
-            stream_id="s",
-            epoch_id=1,
-        )
-        with pytest.raises(CommitConflict):
-            t._commit(
-                "overwrite",
-                adds,
-                h,
-                schema,
-                {"operation": "rebucket"},
-                expect_version=pre,
-                n_buckets=8,
-            )
     # the concurrent write survives; state is the full replay
     assert ("conv-r", 0) in _state(type(t)(spark, path))
 
@@ -526,10 +504,7 @@ def test_manifest_entries_record_column_ranges(spark, tmp_path, impl):
     t = _mk(impl, spark, tmp_path / "t", policy=None, n_buckets=4)
     apply_changes(t, gen_changes(spark, 1000, seed=7), stream_id="s", epoch_id=0)
     t.refresh()
-    if isinstance(t, LakeTable):
-        entries = [e for fs in t.snapshot.buckets.values() for e in fs]
-    else:
-        entries = [e for fs in t._state.live.values() for e in fs]
+    entries = [e for fs in t._bucket_map().values() for e in fs]
     assert entries and all("stats" in e for e in entries)
     assert all(
         {"conv_id", "ts", "_lsn"} <= set(e["stats"]) for e in entries

@@ -10,6 +10,8 @@ change" — is executable, not aspirational.
 
 from __future__ import annotations
 
+import glob
+import os
 import threading
 
 import pandas as pd
@@ -26,6 +28,7 @@ from etl_framework_spark.lakehouse import (
     LakeTable,
     commit_with_retry,
 )
+from etl_framework_spark.lakehouse.table import BucketedTable
 from etl_framework_spark.schemas import (
     CHANGE_SCHEMA,
     KEY_COLUMNS,
@@ -240,6 +243,28 @@ def test_compact_preserves_rows_and_reduces_files(spark, tmp_path, impl):
     assert after == before
 
 
+def test_delete_where_and_tombstone_gc(spark, tmp_path, impl):
+    """Row deletes and tombstone GC run on every format through the
+    shared plane: the deleted key is gone, tombstones are dropped, and
+    every other live row stays."""
+    import datetime
+
+    t = impl.create(
+        spark, str(tmp_path / "t"), STORED, KEY_COLUMNS, n_buckets=4
+    )
+    apply_changes(t, gen_changes(spark, 1500, seed=21), stream_id="s", epoch_id=0)
+    t.refresh()
+    live = {(r["conv_id"], r["turn_idx"]) for r in t.current().collect()}
+    victim = sorted(live)[0][0]
+    t.delete_where(F.col("conv_id") == victim)
+    kept = {k for k in live if k[0] != victim}
+    assert {(r["conv_id"], r["turn_idx"]) for r in t.refresh().current().collect()} == kept
+    assert t.read().where(F.col("_deleted")).count() > 0
+    t.compact_tombstones(older_than=datetime.datetime(2100, 1, 1))
+    assert t.refresh().read().where(F.col("_deleted")).count() == 0
+    assert {(r["conv_id"], r["turn_idx"]) for r in t.current().collect()} == kept
+
+
 def test_expire_snapshots_bounds_history_keeps_data(spark, tmp_path, impl):
     t = impl.create(spark, str(tmp_path / "t"), SIMPLE, ["id"], n_buckets=2)
     for i in range(12):
@@ -253,6 +278,92 @@ def test_expire_snapshots_bounds_history_keeps_data(spark, tmp_path, impl):
     assert t2.read(version=t2.version).count() == live
     with pytest.raises((ValueError, FileNotFoundError)):
         t2.read(version=1)
+    # a compaction dereferences the appended files: expiring down to the
+    # head GCs them and prunes their emptied commit directories
+    t2.compact(min_files=2)
+    out2 = t2.expire_snapshots(keep_last=1, grace_seconds=0)
+    assert set(out) == set(out2) == {
+        "expired_snapshots",
+        "deleted_data_files",
+        "deleted_shard_files",
+        "kept_from_version",
+    }
+    assert out2["deleted_data_files"] > 0
+    assert out2["kept_from_version"] == t2.version
+    assert t2.current().count() == live
+    commit_dirs = glob.glob(os.path.join(t.path, "data", "*"))
+    assert commit_dirs
+    for d in commit_dirs:
+        assert glob.glob(os.path.join(d, "*", "*.parquet")), f"empty {d}"
+
+
+def test_stale_compact_after_every_bucket_was_rewritten_is_a_noop(
+    spark, tmp_path, impl
+):
+    """A stale handle's compaction whose every fragmented bucket was
+    rewritten by another writer conflicts everywhere: nothing is
+    committed and the other writer's rows stay."""
+    path = str(tmp_path / "t")
+    t = impl.create(spark, path, SIMPLE, ["id"], n_buckets=2)
+    for i in range(4):
+        t.append(_df(spark, [(i, f"v{i}"), (i + 100, f"w{i}")]))
+    stale = impl(spark, path)
+    assert stale.file_stats()["max_files_per_bucket"] >= 2
+    fresh = [(i, f"new{i}") for i in (0, 1, 2, 3, 100, 101, 102, 103)]
+    impl(spark, path).overwrite(_df(spark, fresh))
+    head = impl(spark, path).version
+
+    assert stale.compact(min_files=2) == head
+    t = impl(spark, path)
+    assert t.version == head
+    assert sorted((r["id"], r["v"]) for r in t.current().collect()) == fresh
+
+
+def test_time_travel_reads_under_the_head_schema(spark, tmp_path, impl):
+    """Every version reads with the CURRENT column set: files from before
+    a schema evolution upcast (new columns NULL) on both formats."""
+    t = impl.create(spark, str(tmp_path / "t"), SIMPLE, ["id"], n_buckets=2)
+    v_pre = t.append(_df(spark, [(1, "a")]))
+    t.append(
+        spark.createDataFrame([(2, "b", "x")], "id long, v string, extra string")
+    )
+    old = t.read(version=v_pre)
+    assert old.columns == t.schema.fieldNames() == ["id", "v", "extra"]
+    assert [tuple(r) for r in old.collect()] == [(1, "a", None)]
+
+
+#: the data plane both formats inherit from ``BucketedTable``
+SHARED_DATA_PLANE = (
+    "read",
+    "current",
+    "touched_buckets",
+    "_read_files",
+    "_write_data",
+    "_ensure_schema",
+    "_commit",
+    "append",
+    "overwrite",
+    "merge",
+    "compact",
+    "rebucket",
+    "delete_where",
+    "compact_tombstones",
+    "file_stats",
+    "changes_between",
+    "expire_snapshots",
+)
+
+
+def test_data_plane_is_defined_once():
+    """Structural guard against a second copy of any data-plane method:
+    the formats are metadata stores over one shared plane, and neither
+    subclasses the other."""
+    for name in SHARED_DATA_PLANE:
+        assert name in vars(BucketedTable), name
+        for cls in IMPLS.values():
+            assert name not in vars(cls), f"{cls.__name__}.{name}"
+    assert not issubclass(LakeTable, DirTable)
+    assert not issubclass(DirTable, LakeTable)
 
 
 def test_streaming_ingest_through_factory(spark, tmp_path, impl):
